@@ -41,8 +41,8 @@ from refluxdb_spark.errors import NoDataError, TableNotFoundError, ValidationErr
 from refluxdb_spark.gateway import ast_validate, validate_query
 from refluxdb_spark.schema import (
     MEASUREMENT_COLUMNS,
-    MEASUREMENTS_SCHEMA,
-    MEASUREMENTS_TYPED_SCHEMA,
+    MEASUREMENTS_READ_SCHEMA,
+    MEASUREMENTS_TYPED_READ_SCHEMA,
     TYPED_MEASUREMENT_COLUMNS,
 )
 from refluxdb_spark.sources.lineprotocol import (
@@ -394,7 +394,7 @@ class RefluxEngine:
         """
         from pyspark.sql import Observation
 
-        df = self._table()
+        df = self._table(series)
         target = df.filter(F.expr(predicate))
         if series is not None:
             target = target.filter(F.col("series") == series)
@@ -473,7 +473,7 @@ class RefluxEngine:
         line-protocol field became a row with its ``name``). Scans only
         the requested series' partition (pruned) — or all partitions
         grouped, one map-side-combined distinct either way."""
-        df = self._table()
+        df = self._table(series)
         if series is not None:
             df = df.filter(F.col("series") == series)
         rows = (
@@ -488,7 +488,7 @@ class RefluxEngine:
         """``SHOW TAG KEYS``: distinct tag-map keys per series —
         explode(map_keys(tags)) + distinct, partition-pruned when a
         series is given."""
-        df = self._table()
+        df = self._table(series)
         if series is not None:
             df = df.filter(F.col("series") == series)
         rows = (
@@ -516,7 +516,7 @@ class RefluxEngine:
         set is capped at ``limit`` (default 10k) and exceeding it
         raises ``ValidationError`` — the caller asked a data question
         (use ``query``/``sql``), not a schema question."""
-        df = self._table()
+        df = self._table(series)
         if series is not None:
             df = df.filter(F.col("series") == series)
         rows = (
@@ -587,19 +587,29 @@ class RefluxEngine:
         return rows.select(*cols).withColumn("day", F.to_date("time"))
 
     # -------------------------------------------------------------- reads
-    def _table(self) -> DataFrame:
-        empty_schema = (
-            MEASUREMENTS_TYPED_SCHEMA if self.typed_fields else MEASUREMENTS_SCHEMA
+    def _table(self, series: str | None = None) -> DataFrame:
+        """The measurements table, or only ``series``' partition of it —
+        the one way the engine opens the lake table.
+
+        The read carries the declared schema (``schema.py``: data
+        columns in file order, then ``series`` string and ``day``
+        date), so opening the table runs no schema-inference job and
+        partition values keep their written type. Given a series, only
+        its ``series=<name>/`` directory is listed (``basePath`` keeps
+        the partition columns): the reference likewise looks the
+        series up in its registry and opens that one database
+        (``persistence.rs:21-23,199``), never the others. Each call
+        lists the files fresh, so writes by another engine on the same
+        warehouse are visible to the next read. A missing directory,
+        or one holding only ``_temporary`` output, reads as empty."""
+        schema = (
+            MEASUREMENTS_TYPED_READ_SCHEMA if self.typed_fields else MEASUREMENTS_READ_SCHEMA
         )
-        if not os.path.exists(self._path):
-            return self.spark.createDataFrame([], empty_schema)
-        try:
-            return self.spark.read.parquet(self._path)
-        except Exception:
-            # path exists but holds no committed parquet footers yet
-            # (first write in flight, or only _temporary dirs): behave
-            # as an empty table instead of leaking UNABLE_TO_INFER_SCHEMA
-            return self.spark.createDataFrame([], empty_schema)
+        root = self._path
+        path = root if series is None else _series_dir(root, series)
+        if not os.path.exists(path):
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).option("basePath", root).parquet(path)
 
     def list_series(self) -> list[str]:
         """``GET /`` (``handlers.rs:24-32`` / ``persistence.rs:59-68``):
@@ -650,9 +660,7 @@ class RefluxEngine:
         directory existence check — one metadata lookup, zero scan.
         Same committed-data requirement as ``list_series`` so the two
         can never disagree about a half-written partition."""
-        return self._partition_committed(
-            os.path.join(self._path, f"series={_escape_partition_value(name)}")
-        )
+        return self._partition_committed(_series_dir(self._path, name))
 
     def _ensure_views(self, tables: list[str]) -> None:
         known = set(self.list_series())
@@ -672,7 +680,7 @@ class RefluxEngine:
                 # (re)create the series view if data changed since —
                 # the view pins a file listing, so writes invalidate it
                 if base not in self._views:
-                    self._table().filter(F.col("series") == base).drop(
+                    self._table(base).filter(F.col("series") == base).drop(
                         "series", "day"
                     ).createOrReplaceTempView(base)
                     self._views.add(base)
@@ -810,7 +818,7 @@ class RefluxEngine:
                 .agg(*reagg)
                 .select("bucket_start", "n", "sum_value", "min_value", "max_value")
             )
-        base = self._table().filter(F.col("series") == series)
+        base = self._table(series).filter(F.col("series") == series)
         if field is not None:
             base = base.filter(F.col("name") == field)
         return time_bucket(
@@ -1145,7 +1153,7 @@ class RefluxEngine:
         ``tags[key] = value`` map-lookup scan, so results are always
         correct; routing is purely an access-path decision (same
         contract as ``query(prefer_rollup=True)``)."""
-        base = self._table().filter(F.col("series") == series)
+        base = self._table(series).filter(F.col("series") == series)
         routed = None
         if prefer_index and self.tag_index_fresh():
             sel = (
@@ -1187,7 +1195,7 @@ class RefluxEngine:
     def _series_day_count(self, series: str) -> int:
         """Number of day partitions one series holds — directory
         listing only, the same metadata shortcut as ``list_series``."""
-        d = os.path.join(self._path, f"series={_escape_partition_value(series)}")
+        d = _series_dir(self._path, series)
         if not os.path.isdir(d):
             return 0
         return sum(1 for e in os.listdir(d) if e.startswith("day="))
@@ -1202,7 +1210,7 @@ class RefluxEngine:
         field names are discovered with one DISTINCT over the single
         series partition — bounded by the schema's field count, not by
         data volume, but still a scan."""
-        base = self._table().filter(F.col("series") == series)
+        base = self._table(series).filter(F.col("series") == series)
         if fields is None:
             fields = sorted(
                 r.name for r in base.select("name").distinct().collect()
@@ -1240,7 +1248,7 @@ class RefluxEngine:
             TYPED_MEASUREMENT_COLUMNS if self.typed_fields else MEASUREMENT_COLUMNS
         )
         return (
-            self._table()
+            self._table(series)
             .filter(F.col("series") == series)
             .filter(F.col("time").between(F.lit(start_ts), F.lit(end_ts)))
             .select(*cols)
@@ -1256,6 +1264,11 @@ _HIVE_SPECIAL = set('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(0x20)}
 
 def _escape_partition_value(v: str) -> str:
     return "".join(f"%{ord(c):02X}" if c in _HIVE_SPECIAL else c for c in v)
+
+
+def _series_dir(root: str, series: str) -> str:
+    """The series' partition directory under the table root."""
+    return os.path.join(root, f"series={_escape_partition_value(series)}")
 
 
 def _unescape_partition_value(v: str) -> str:

@@ -550,67 +550,70 @@ def kcenter_coreset(
         F.col(vec_col).cast("array<double>").alias("_v"),
     ).withColumn("_nrm", norm).localCheckpoint(eager=True)
     prev_ckpt = cand  # round r-1's checkpoint, released once r lands
-    seed_rows = cand.orderBy(F.col("_id").asc()).limit(1).collect()
-    out: list[tuple[int, object, float | None]] = []
-    if seed_rows:
-        pick_id, pick_v, pick_nrm = (
-            seed_rows[0]["_id"], seed_rows[0]["_v"], seed_rows[0]["_nrm"]
-        )
-        out.append((0, pick_id, None))
-        # null-safe exclusion: plain != silently drops NULL-id rows
-        # from candidacy (null != x is null), which would tighten the
-        # old left-anti-join semantics (ADVICE r18)
-        cand = cand.filter(~F.col("_id").eqNullSafe(F.lit(pick_id)))
-        mind = None  # running min-dist column, set on the first fold
-        for r in range(1, k):
-            # distance to the newest pick only: one dot-fold per row,
-            # norms from the stored column and the collected pick row
-            # (both produced by the SAME Spark sqrt-fold expression) —
-            # same two sqrt results multiplied, same round-6, as the
-            # all-pairs recompute
-            d_new = F.lit(1.0) - F.round(
-                F.aggregate(
-                    F.zip_with(
-                        "_v",
-                        F.array(*[F.lit(float(x)) for x in pick_v]),
-                        lambda a, b: a * b,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                / (F.col("_nrm") * F.lit(float(pick_nrm))),
-                6,
-            )
-            mind = d_new if mind is None else F.least(F.col("_mind"), d_new)
-            # lazy checkpoint materialized by the top-1 probe itself
-            # (TakeOrdered computes every partition), so each round is
-            # exactly ONE driver-synchronized job and the plan never
-            # accumulates more than one fold of lineage
-            cand = cand.select(
-                "_id", "_v", "_nrm", mind.alias("_mind")
-            ).localCheckpoint(eager=False)
-            new_ckpt = cand
-            mind = F.col("_mind")
-            top = (
-                cand.orderBy(F.col("_mind").desc(), F.col("_id").asc())
-                .limit(1)
-                .collect()
-            )
-            # the top-1 collect materialized this round's checkpoint;
-            # the previous round's blocks are now dead — release them
-            # explicitly so executor storage holds ~2 corpus copies,
-            # not one per round (ADVICE r18: GC-driven ContextCleaner
-            # frees them only eventually)
-            _release_local_checkpoint(prev_ckpt)
-            prev_ckpt = new_ckpt
-            if not top:
-                break
+    try:
+        seed_rows = cand.orderBy(F.col("_id").asc()).limit(1).collect()
+        out: list[tuple[int, object, float | None]] = []
+        if seed_rows:
             pick_id, pick_v, pick_nrm = (
-                top[0]["_id"], top[0]["_v"], top[0]["_nrm"]
+                seed_rows[0]["_id"], seed_rows[0]["_v"], seed_rows[0]["_nrm"]
             )
-            out.append((r, pick_id, top[0]["_mind"]))
+            out.append((0, pick_id, None))
+            # null-safe exclusion: plain != silently drops NULL-id rows
+            # from candidacy (null != x is null), which would tighten the
+            # old left-anti-join semantics (ADVICE r18)
             cand = cand.filter(~F.col("_id").eqNullSafe(F.lit(pick_id)))
-        # nothing reads the final round's checkpoint after the loop
+            mind = None  # running min-dist column, set on the first fold
+            for r in range(1, k):
+                # distance to the newest pick only: one dot-fold per row,
+                # norms from the stored column and the collected pick row
+                # (both produced by the SAME Spark sqrt-fold expression) —
+                # same two sqrt results multiplied, same round-6, as the
+                # all-pairs recompute
+                d_new = F.lit(1.0) - F.round(
+                    F.aggregate(
+                        F.zip_with(
+                            "_v",
+                            F.array(*[F.lit(float(x)) for x in pick_v]),
+                            lambda a, b: a * b,
+                        ),
+                        F.lit(0.0),
+                        lambda acc, x: acc + x,
+                    )
+                    / (F.col("_nrm") * F.lit(float(pick_nrm))),
+                    6,
+                )
+                mind = d_new if mind is None else F.least(F.col("_mind"), d_new)
+                # lazy checkpoint materialized by the top-1 probe itself
+                # (TakeOrdered computes every partition), so each round is
+                # exactly ONE blocking collect job and the plan never
+                # accumulates more than one fold of lineage
+                cand = cand.select(
+                    "_id", "_v", "_nrm", mind.alias("_mind")
+                ).localCheckpoint(eager=False)
+                new_ckpt = cand
+                mind = F.col("_mind")
+                top = (
+                    cand.orderBy(F.col("_mind").desc(), F.col("_id").asc())
+                    .limit(1)
+                    .collect()
+                )
+                # the top-1 collect materialized this round's checkpoint;
+                # the previous round's blocks are now dead — release them
+                # explicitly so executor storage holds ~2 corpus copies,
+                # not one per round (ADVICE r18: GC-driven ContextCleaner
+                # frees them only eventually)
+                _release_local_checkpoint(prev_ckpt)
+                prev_ckpt = new_ckpt
+                if not top:
+                    break
+                pick_id, pick_v, pick_nrm = (
+                    top[0]["_id"], top[0]["_v"], top[0]["_nrm"]
+                )
+                out.append((r, pick_id, top[0]["_mind"]))
+                cand = cand.filter(~F.col("_id").eqNullSafe(F.lit(pick_id)))
+    finally:
+        # nothing reads the last live checkpoint after the loop; with
+        # an empty corpus it is the eager corpus checkpoint above
         _release_local_checkpoint(prev_ckpt)
     id_field = corpus.select(F.col(id_col)).schema.fields[0]
     return spark.createDataFrame(

@@ -78,3 +78,22 @@ MEASUREMENTS_TYPED_SCHEMA = T.StructType(
 TYPED_MEASUREMENT_COLUMNS = MEASUREMENT_COLUMNS + [
     "value_type", "value_int", "value_bool", "value_str",
 ]
+
+
+def _as_stored(table: T.StructType) -> T.StructType:
+    """The table as a parquet read returns it: the data columns in
+    file order, then the ``series``/``day`` partition columns. Pinned
+    as strings and dates so partition discovery never infers a type
+    from the directory names (series ``007`` is not the integer 7)."""
+    return T.StructType(
+        [f for f in table.fields if f.name != "series"]
+        + [
+            T.StructField("series", T.StringType(), True),
+            T.StructField("day", T.DateType(), True),
+        ]
+    )
+
+
+# Read schemas of the lake table (``RefluxEngine._table``).
+MEASUREMENTS_READ_SCHEMA = _as_stored(MEASUREMENTS_SCHEMA)
+MEASUREMENTS_TYPED_READ_SCHEMA = _as_stored(MEASUREMENTS_TYPED_SCHEMA)

@@ -10,13 +10,17 @@ reference                  here
 ``POST /write`` body =     parse + append; 400 on parse error
 line protocol              (handlers.rs:100-145)
 ``POST /query`` form       validate -> Catalyst -> JSON rows
-field ``q``                (handlers.rs:70-93); 400 on validator or
-                           unknown-table errors (no panics — Q12)
+field ``q``                (handlers.rs:70-93); 400 on validator
+                           errors and on SQL Spark rejects, 404 on
+                           unknown tables (no panics — Q12)
 ``GET /range/{ts}          inclusive time-between scan; 404 unknown
 ?start&end`` RFC3339       series, 400 malformed datetime (Q13 fixed)
 UDP datagram = one line    ``UDPLineServer``: datagram -> buffer ->
 (udpserver.rs:16-91)       batched engine append; optional echo
 =========================  ==========================================
+
+Any other failure answers 500 with a JSON body, and a malformed
+``Content-Length`` answers 400: no request ends in a dropped socket.
 
 Documented divergence (O17): responses are real JSON, not the
 reference's Rust ``Debug``-format strings inside JSON
@@ -39,20 +43,37 @@ import json
 import socket
 import socketserver
 import threading
+import traceback
+from contextlib import contextmanager
 from datetime import datetime
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
 
+from pyspark.errors import (
+    AnalysisException,
+    ArithmeticException,
+    ArrayIndexOutOfBoundsException,
+    DateTimeException,
+    NumberFormatException,
+)
 from pyspark.sql import functions as F
 
 from refluxdb_spark.engine import RefluxEngine
-from refluxdb_spark.errors import (
-    NoDataError,
-    ParseError,
-    RefluxError,
-    TableNotFoundError,
-    ValidationError,
+from refluxdb_spark.errors import ParseError, RefluxError, TableNotFoundError
+
+# Spark's verdicts on the client's own SQL: it fails analysis, or an
+# ANSI check fails while it runs (cast, divide by zero, overflow, index)
+_SQL_CLIENT_ERRORS = (
+    AnalysisException,
+    ArithmeticException,
+    ArrayIndexOutOfBoundsException,
+    DateTimeException,
+    NumberFormatException,
 )
+
+
+def _first_line(e: Exception) -> str:
+    return (str(e).splitlines() or [type(e).__name__])[0]
 
 
 def _json_default(v):
@@ -75,9 +96,28 @@ class _Handler(BaseHTTPRequestHandler):
     def log_message(self, *args) -> None:  # quiet test output
         pass
 
+    @contextmanager
+    def _json_errors(self):
+        """Answer every failure of the request body with a JSON error,
+        so no request ends in a dropped connection: 404 for an unknown
+        series, 400 for engine rejections and for SQL that Spark
+        refuses (analysis errors, ANSI runtime errors), 500 for
+        anything else."""
+        try:
+            yield
+        except TableNotFoundError as e:
+            self._send(404, {"error": str(e)})  # handlers.rs:44-48
+        except RefluxError as e:
+            self._send(400, {"error": str(e)})  # handlers.rs:86-91
+        except _SQL_CLIENT_ERRORS as e:
+            self._send(400, {"error": _first_line(e)})
+        except Exception as e:
+            traceback.print_exc()
+            self._send(500, {"error": f"{type(e).__name__}: {_first_line(e)}"})
+
     def do_GET(self) -> None:
         url = urlparse(self.path)
-        try:
+        with self._json_errors():
             if url.path == "/":
                 # GET / (handlers.rs:24-32)
                 self._send(200, self.engine.list_series())
@@ -112,16 +152,15 @@ class _Handler(BaseHTTPRequestHandler):
                 self._send(200, rows)
             else:
                 self._send(404, {"error": "not found"})
-        except TableNotFoundError as e:
-            self._send(404, {"error": str(e)})  # handlers.rs:44-48
-        except RefluxError as e:
-            self._send(400, {"error": str(e)})
 
     def do_POST(self) -> None:
         url = urlparse(self.path)
-        length = int(self.headers.get("Content-Length", 0))
-        body = self.rfile.read(length).decode("utf-8", errors="replace")
-        try:
+        with self._json_errors():
+            length = self.headers.get("Content-Length", "0").strip()
+            if not (length.isascii() and length.isdigit()):
+                self._send(400, {"error": f"malformed Content-Length: {length!r}"})
+                return
+            body = self.rfile.read(int(length)).decode("utf-8", errors="replace")
             if url.path == "/write":
                 # POST /write (handlers.rs:100-145); body may hold many lines
                 lines = [ln for ln in body.splitlines() if ln.strip()]
@@ -142,10 +181,6 @@ class _Handler(BaseHTTPRequestHandler):
                 self._send(200, self.engine.query_rows(q, prefer_rollup=rollup))
             else:
                 self._send(404, {"error": "not found"})
-        except TableNotFoundError as e:
-            self._send(404, {"error": str(e)})
-        except (ValidationError, ParseError, NoDataError) as e:
-            self._send(400, {"error": str(e)})  # handlers.rs:86-91
 
 
 def serve_http(engine: RefluxEngine, host: str = "127.0.0.1", port: int = 8086):

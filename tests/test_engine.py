@@ -1038,3 +1038,86 @@ def test_typed_lake_survives_maintenance_lifecycle(spark, tmp_path_factory):
     # so h0 carries the even-i field values)
     assert {r[4] for r in final if r[1] == "cores"} == {0, 2}
     assert len([r for r in kept if r not in final]) == 16
+
+
+# ---------------------------------------------------------------- read path
+def _with_jobs(spark, fn):
+    """``fn()``'s result and the Spark job ids it started, counted
+    under a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"fence-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read-path fence", False)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_partition_values_keep_their_string_type(spark, tmp_path):
+    """Series names that look like numbers or dates stay distinct
+    strings: ``007`` and ``7`` never merge into the integer 7, and
+    ``2024-01-01`` is not read back as a date."""
+    for names in (["007", "7"], ["2024-01-01"]):
+        eng = RefluxEngine(spark, str(tmp_path / f"wh_{len(names)}"))
+        eng.write_lines(
+            [f"{n} v={i + 1}.0 1700000000000000000" for i, n in enumerate(names)]
+        )
+        assert eng._table().schema["series"].dataType.simpleString() == "string"
+        for i, n in enumerate(names):
+            got = eng.range(n, "2000-01-01T00:00:00Z", "2100-01-01T00:00:00Z")
+            assert [r.value for r in got.collect()] == [i + 1.0]
+        rows = eng.sql("SELECT series, value FROM measurements").collect()
+        assert sorted((r.series, r.value) for r in rows) == [
+            (n, i + 1.0) for i, n in enumerate(names)
+        ]
+        assert eng.field_keys() == {n: ["v"] for n in names}
+
+
+def test_range_and_view_rebuild_run_no_spark_job(spark, tmp_path, engine):
+    """Opening the table is pure planning: building a range scan, and
+    rebuilding a query's series view after a write, start no Spark job
+    (no schema inference) — the only jobs come at collect."""
+    df, jobs = _with_jobs(spark, lambda: engine.range(
+        "cpu", "2023-11-14T00:00:00Z", "2023-11-15T00:00:00Z"
+    ))
+    assert jobs == [] and df.count() == 3
+    eng = RefluxEngine(spark, str(tmp_path / "wh"))
+    eng.write_lines(["rebuilt v=1.0 1700000000000000000"])
+    eng.query("SELECT * FROM rebuilt")
+    eng.write_lines(["rebuilt v=2.0 1700000001000000000"])
+    assert "rebuilt" not in eng._views  # the write dropped the stale view
+    df, jobs = _with_jobs(spark, lambda: eng.query("SELECT * FROM rebuilt"))
+    assert jobs == [] and "rebuilt" in eng._views
+    assert sorted(r.value for r in df.collect()) == [1.0, 2.0]
+
+
+def test_uncommitted_partition_reads_empty(spark, tmp_path):
+    """A directory holding only ``_temporary`` output (a write in
+    flight or aborted) reads as an empty table, whether it is the
+    whole table or one series; such a series stays a 404 for range."""
+    eng = RefluxEngine(spark, str(tmp_path / "wh"))
+    os.makedirs(os.path.join(eng._path, "_temporary", "0"))
+    assert eng._table().count() == 0
+    eng.write_lines(["cpu v=1.0 1700000000000000000"])
+    os.makedirs(os.path.join(eng._path, "series=ghost", "_temporary", "0"))
+    assert eng._table("ghost").count() == 0
+    assert eng._table().count() == 1
+    with pytest.raises(TableNotFoundError):
+        eng.range("ghost", "2000-01-01T00:00:00Z", "2100-01-01T00:00:00Z")
+
+
+def test_series_view_and_range_keep_decoder_column_order(engine):
+    """``SELECT *`` from a series view and ``range()`` return the
+    reference decoder's positional column order, which the
+    strict-compat decoder depends on. (The typed engine's extended
+    order is fenced by ``test_typed_table_carries_extended_schema`` and
+    ``test_typed_range_scan_carries_typed_columns``.)"""
+    from refluxdb_spark.schema import MEASUREMENT_COLUMNS
+
+    assert engine.query("SELECT * FROM test").columns == MEASUREMENT_COLUMNS
+    assert engine.range(
+        "test", "2000-01-01T00:00:00Z", "2100-01-01T00:00:00Z"
+    ).columns == MEASUREMENT_COLUMNS

@@ -4717,3 +4717,17 @@ def test_ks_two_sample_matches_scipy_free_replay(spark):
     hi = spark.createDataFrame([(9.0,), (8.0,)], ["value"])
     far = ks_two_sample(lo, hi).collect()[0]
     assert far.ks_d == 1.0
+
+
+def test_kcenter_coreset_empty_corpus_releases_checkpoint(spark):
+    """An empty corpus selects nothing and still releases the eager
+    corpus checkpoint: no persisted RDD outlives the call."""
+    from refluxdb_spark.operators.sampling import kcenter_coreset
+
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    df = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    assert kcenter_coreset(df, k=3).collect() == []
+    assert persisted() - before == set()

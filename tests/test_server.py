@@ -68,6 +68,49 @@ def test_query_validation_errors(served):
     assert code == 404 and "table not found" in out["error"]
 
 
+def test_query_rejected_by_spark_is_400(served):
+    """SQL the gateway passes but Spark refuses — an unresolved column
+    (analysis) or an ANSI runtime error (invalid cast, divide by zero)
+    — answers 400 with the error's first line, not a dropped socket."""
+    _, port, _ = served
+    code, out = _http("POST", port, "/write", "errs v=1.0 1700000000000000000")
+    assert code == 200
+    for q, error_class in [
+        ("SELECT nosuch FROM errs", "UNRESOLVED_COLUMN"),
+        ("SELECT CAST(name AS INT) FROM errs", "CAST_INVALID_INPUT"),
+        ("SELECT CAST(value AS INT) DIV 0 FROM errs", "DIVIDE_BY_ZERO"),
+    ]:
+        code, out = _http("POST", port, "/query", f"q={q}")
+        assert code == 400 and error_class in out["error"], (q, out)
+        assert "\n" not in out["error"]
+
+
+def test_unexpected_handler_error_is_500_json(served, monkeypatch):
+    eng, port, _ = served
+
+    def boom():
+        raise RuntimeError("disk on fire\nsecond line")
+
+    monkeypatch.setattr(eng, "list_series", boom)
+    code, out = _http("GET", port, "/")
+    assert code == 500 and out == {"error": "RuntimeError: disk on fire"}
+
+
+@pytest.mark.parametrize("length", ["abc", "-1"])
+def test_malformed_content_length_is_400(served, length):
+    import http.client
+
+    _, port, _ = served
+    conn = http.client.HTTPConnection("127.0.0.1", port, timeout=30)
+    try:
+        conn.request("POST", "/query", headers={"Content-Length": length})
+        resp = conn.getresponse()
+        assert resp.status == 400
+        assert "Content-Length" in json.loads(resp.read())["error"]
+    finally:
+        conn.close()
+
+
 def test_range_endpoint(served):
     _, port, _ = served
     code, rows = _http(
