@@ -34,7 +34,7 @@ import re
 import shutil
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from refluxdb_spark.errors import NoDataError, TableNotFoundError, ValidationError
@@ -148,85 +148,74 @@ class RefluxEngine:
         the oracled typed-fields query feed millions of lines without
         ever materializing them on the driver)."""
         parse = parse_lines_typed_df if self.typed_fields else parse_lines_df
+        return self._append_lines(parse(raw, line_col))
+
+    def _append_lines(
+        self, parsed: DataFrame, record_metrics: bool = False
+    ) -> tuple[int, int]:
+        """Append parsed lines and dead-letter the rejected ones — the
+        one write path of HTTP, UDP, bulk and streaming ingest. The
+        rejected count is observed on the same write job; the rejected
+        lines are re-derived and written only when there are any.
+        Returns (rows_written, n_dead_letters)."""
         explode = explode_typed_fields if self.typed_fields else explode_fields
-        parsed = parse(raw, line_col).cache()
-        try:
-            bad = parsed.filter(F.col("error").isNotNull())
-            n_dead = bad.count()
-            if n_dead:
-                self.write_dead_letters(bad)
-            rows = explode(parsed)
-            out = self._finalize_rows(rows)
-            n = out.count()
-            if n:
-                (
-                    out.repartition("series")
-                    .write.mode("append")
-                    .partitionBy("series", "day")
-                    .parquet(self._path)
-                )
-                self._views.clear()  # refresh views on next query
-            return n, n_dead
-        finally:
-            parsed.unpersist()
+        dead = Observation()
+        observed = parsed.observe(
+            dead, F.count(F.col("error")).alias("n")  # count() skips nulls
+        )
+        written = self._append(explode(observed), record_metrics)["rows"]
+        n_dead = int(dead.get["n"])
+        if n_dead:
+            self.write_dead_letters(parsed.filter(F.col("error").isNotNull()))
+        return written, n_dead
+
+    def _append(self, rows: DataFrame, record_metrics: bool = False) -> dict:
+        """Append pre-shaped rows as ONE Spark write: each (series, day)
+        lands in one shuffle partition, so one write adds one
+        time-sorted file per partition it touches. The batch metrics
+        (rows, null_values, min/max event time in micros) come from a
+        ``Dataset.observe`` on that write job itself — no second scan.
+        ``record_metrics`` also appends them to the ingest ledger."""
+        obs = Observation()
+        out = self._finalize_rows(rows).repartition("series", "day").observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.when(F.col("value").isNull(), 1).otherwise(0)).alias(
+                "null_values"
+            ),
+            F.min(F.unix_micros("time")).alias("min_time_us"),
+            F.max(F.unix_micros("time")).alias("max_time_us"),
+        )
+        _write_sorted(out, self._path)
+        m = {k: (0 if v is None else int(v)) for k, v in obs.get.items()}
+        if m["rows"]:
+            self._views.clear()  # refresh views on next query
+        if record_metrics:
+            self.spark.createDataFrame(
+                [(m["rows"], m["null_values"], m["min_time_us"], m["max_time_us"])],
+                "rows bigint, null_values bigint, min_time_us bigint, max_time_us bigint",
+            ).withColumn("recorded_at", F.current_timestamp()).write.mode(
+                "append"
+            ).parquet(os.path.join(self.warehouse, "ingest_metrics"))
+        return m
 
     def write_dataframe(
         self, rows: DataFrame, record_metrics: bool = False
     ) -> dict | None:
         """Append pre-shaped rows (series, tags, ts, name, value) — the
-        bulk/streaming ingest entry (used by streaming.foreachBatch).
+        bulk entry for callers that shape their own rows. Same single
+        write as ``write_lines``: one time-sorted file per (series,
+        day) partition touched, so parquet row-group min/max stats
+        make later time-range scans skip pages — the lake-table
+        equivalent of the reference's per-series B-tree time locality.
 
-        Rows are sorted by time within each output partition so parquet
-        row-group min/max stats make later time-range scans skip pages
-        — the lake-table equivalent of the reference's per-series
-        B-tree time locality.
-
-        ``record_metrics=True`` attaches a ``Dataset.observe`` to the
-        write: (rows, null_values, min/max event time in micros)
-        computed BY the write job itself — no second scan of the batch,
-        the idiomatic Spark shape for per-batch ingest observability.
-        The metrics row is appended to ``{warehouse}/ingest_metrics``
-        (a tiny auditable ledger — the streaming SLA/lag dashboards
-        read it instead of rescanning the table) and returned."""
-        out = self._finalize_rows(rows)
-        obs = None
-        if record_metrics:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            out = out.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.when(F.col("value").isNull(), 1).otherwise(0)).alias(
-                    "null_values"
-                ),
-                F.min(F.unix_micros("time")).alias("min_time_us"),
-                F.max(F.unix_micros("time")).alias("max_time_us"),
-            )
-        (
-            out.sortWithinPartitions("series", "day", "time")
-            # "day" rides the sort deliberately: the dynamic-partition
-            # writer requires ordering on (series, day) and INSERTS ITS
-            # OWN (order-destroying) sort unless the child ordering
-            # already satisfies it — (series, time) alone does not
-            # satisfy it syntactically even though day derives from
-            # time, and the writer sort scrambled file row order
-            # (caught by test_measurements_files_time_sorted_with_stats)
-            .write.mode("append")
-            .partitionBy("series", "day")
-            .parquet(self._path)
-        )
-        self._views.clear()
-        if obs is None:
-            return None
-        m = {k: (0 if v is None else int(v)) for k, v in obs.get.items()}
-        self.spark.createDataFrame(
-            [(m["rows"], m["null_values"], m["min_time_us"], m["max_time_us"])],
-            "rows bigint, null_values bigint, min_time_us bigint, max_time_us bigint",
-        ).withColumn("recorded_at", F.current_timestamp()).write.mode(
-            "append"
-        ).parquet(os.path.join(self.warehouse, "ingest_metrics"))
-        return m
+        ``record_metrics=True`` returns the batch metrics the write job
+        observed — (rows, null_values, min/max event time in micros) —
+        and appends them to ``{warehouse}/ingest_metrics`` (a tiny
+        auditable ledger the streaming SLA/lag dashboards read instead
+        of rescanning the table). Without it the return is ``None``."""
+        m = self._append(rows, record_metrics)
+        return m if record_metrics else None
 
     def ingest_metrics(self) -> DataFrame:
         """The per-batch ingest ledger written by
@@ -286,30 +275,8 @@ class RefluxEngine:
             for f in files
         )
         n_files = max(1, n_bytes // (target_file_mb * 1024 * 1024))
-        new_dir, commit = self._data.begin_rewrite()
-        try:
-            (
-                df.repartition(int(n_files), "series")
-                .sortWithinPartitions("series", "day", "time")
-            # "day" rides the sort deliberately: the dynamic-partition
-            # writer requires ordering on (series, day) and INSERTS ITS
-            # OWN (order-destroying) sort unless the child ordering
-            # already satisfies it — (series, time) alone does not
-            # satisfy it syntactically even though day derives from
-            # time, and the writer sort scrambled file row order
-            # (caught by test_measurements_files_time_sorted_with_stats)
-                .write.mode("overwrite")
-                .partitionBy("series", "day")
-                .parquet(new_dir)
-            )
-            commit()
-        except BaseException:
-            # an IN-PROCESS failure (failed write, stale-pointer commit)
-            # must not wedge later maintenance behind the claimed dir:
-            # discard it and re-raise. Fail-fast stays for genuinely
-            # concurrent/crashed claims (begin_rewrite's exclusive mkdir).
-            shutil.rmtree(new_dir, ignore_errors=True)
-            raise
+        with self._data.rewrite() as new_dir:
+            _write_sorted(df.repartition(int(n_files), "series"), new_dir)
         if vacuum:
             self._data.vacuum()
         self._views.clear()
@@ -331,33 +298,9 @@ class RefluxEngine:
         src = self._path
         if not os.path.exists(src):
             return
-        new_dir, commit = self._data.begin_rewrite()
-        try:
-            for series_ent in os.listdir(src):
-                if not series_ent.startswith("series="):
-                    continue
-                sdir = os.path.join(src, series_ent)
-                for day_ent in os.listdir(sdir) if os.path.isdir(sdir) else []:
-                    if not day_ent.startswith("day="):
-                        continue
-                    if day_ent[len("day="):] < cutoff:  # ISO dates sort lexically
-                        continue
-                    src_part = os.path.join(sdir, day_ent)
-                    dst_part = os.path.join(new_dir, series_ent, day_ent)
-                    os.makedirs(dst_part, exist_ok=True)
-                    for f in os.listdir(src_part):
-                        if f.startswith(("_", ".")):
-                            continue
-                        s, d = os.path.join(src_part, f), os.path.join(dst_part, f)
-                        try:
-                            os.link(s, d)
-                        except OSError:
-                            shutil.copy2(s, d)
-            commit()
-        except BaseException:
-            # see compact(): discard the claimed dir on in-process failure
-            shutil.rmtree(new_dir, ignore_errors=True)
-            raise
+        with self._data.rewrite() as new_dir:
+            # ISO dates sort lexically
+            _link_partitions(src, new_dir, lambda series, day: day >= cutoff)
         if vacuum:
             self._data.vacuum()
         self._views.clear()
@@ -380,7 +323,7 @@ class RefluxEngine:
         order preserved); every untouched partition HARDLINKS into the
         fresh version tree — at 100 TB erasing one user touches the
         handful of partitions their rows live in, never the table.
-        Object-store-safe via the same begin_rewrite/pointer-commit
+        Object-store-safe via the same ``rewrite()``/pointer-commit
         protocol as compaction (no renames, crash leaves the live
         table intact). The kept-row count comes from a
         ``Dataset.observe`` on the rewrite itself — no second scan.
@@ -392,78 +335,37 @@ class RefluxEngine:
 
         Returns {"erased": n, "rewritten_partitions": p, "kept": k}.
         """
-        from pyspark.sql import Observation
-
         df = self._table(series)
-        target = df.filter(F.expr(predicate))
+        erase_match = F.expr(predicate)
         if series is not None:
-            target = target.filter(F.col("series") == series)
-        affected = {
-            # day may surface as DATE from partition discovery; the
-            # directory names and concat_ws keys are its str() form
-            (r["series"], str(r["day"]))
-            for r in target.select("series", "day").distinct().collect()
-        }
-        if not affected:
+            erase_match = erase_match & (F.col("series") == series)
+        # one scan gives both the partitions to rewrite and the count;
+        # day's str() form is its directory name
+        counts = df.filter(erase_match).groupBy("series", "day").count().collect()
+        if not counts:
             return {"erased": 0, "rewritten_partitions": 0, "kept": 0}
-        n_erased = target.count()
-        src = self._path
-        new_dir, commit = self._data.begin_rewrite()
-        try:
-            for series_ent in os.listdir(src):
-                if not series_ent.startswith("series="):
-                    continue
-                sdir = os.path.join(src, series_ent)
-                sval = series_ent[len("series="):]
-                for day_ent in os.listdir(sdir) if os.path.isdir(sdir) else []:
-                    if not day_ent.startswith("day="):
-                        continue
-                    if (sval, day_ent[len("day="):]) in affected:
-                        continue  # rewritten below, not linked
-                    src_part = os.path.join(sdir, day_ent)
-                    dst_part = os.path.join(new_dir, series_ent, day_ent)
-                    os.makedirs(dst_part, exist_ok=True)
-                    for f in os.listdir(src_part):
-                        if f.startswith(("_", ".")):
-                            continue
-                        s, d = os.path.join(src_part, f), os.path.join(dst_part, f)
-                        try:
-                            os.link(s, d)
-                        except OSError:
-                            shutil.copy2(s, d)
+        affected = {(r["series"], str(r["day"])) for r in counts}
+        n_erased = sum(r["count"] for r in counts)
+        with self._data.rewrite() as new_dir:
+            _link_partitions(
+                self._path, new_dir, lambda s, d: (s, d) not in affected
+            )
             in_affected = F.concat_ws("\x00", "series", "day").isin(
                 [f"{s}\x00{d}" for s, d in affected]
             )
-            erase_match = F.expr(predicate)
-            if series is not None:
-                erase_match = erase_match & (F.col("series") == series)
-            keep = df.filter(in_affected & ~erase_match)
             obs = Observation("erase")
-            (
-                keep.observe(obs, F.count(F.lit(1)).alias("kept"))
-                .sortWithinPartitions("series", "day", "time")
-            # "day" rides the sort deliberately: the dynamic-partition
-            # writer requires ordering on (series, day) and INSERTS ITS
-            # OWN (order-destroying) sort unless the child ordering
-            # already satisfies it — (series, time) alone does not
-            # satisfy it syntactically even though day derives from
-            # time, and the writer sort scrambled file row order
-            # (caught by test_measurements_files_time_sorted_with_stats)
-                .write.mode("append")
-                .partitionBy("series", "day")
-                .parquet(new_dir)
+            _write_sorted(
+                df.filter(in_affected & ~erase_match).observe(
+                    obs, F.count(F.lit(1)).alias("kept")
+                ),
+                new_dir,
             )
             kept = int(obs.get["kept"])
-            commit()
-        except BaseException:
-            # see compact(): discard the claimed dir on in-process failure
-            shutil.rmtree(new_dir, ignore_errors=True)
-            raise
         if vacuum:
             self._data.vacuum()
         self._views.clear()
         return {
-            "erased": int(n_erased),
+            "erased": n_erased,
             "rewritten_partitions": len(affected),
             "kept": kept,
         }
@@ -549,8 +451,9 @@ class RefluxEngine:
     def table_as_of(self, version: int) -> DataFrame:
         """Read the measurements table AS OF a retained version — the
         audit/rollback read. Raises KeyError for vacuumed or unknown
-        versions."""
-        return self.spark.read.parquet(self._data.resolve(version))
+        versions. Reads through the declared schema, like the live
+        table."""
+        return self._table(version=version)
 
     def _finalize_rows(self, rows: DataFrame) -> DataFrame:
         # Reference semantics: id = fresh UUIDv4 per row (persistence.rs:110),
@@ -587,9 +490,12 @@ class RefluxEngine:
         return rows.select(*cols).withColumn("day", F.to_date("time"))
 
     # -------------------------------------------------------------- reads
-    def _table(self, series: str | None = None) -> DataFrame:
+    def _table(
+        self, series: str | None = None, version: int | None = None
+    ) -> DataFrame:
         """The measurements table, or only ``series``' partition of it —
-        the one way the engine opens the lake table.
+        the one way the engine opens the lake table. ``version`` reads a
+        retained version instead of the live one (``table_as_of``).
 
         The read carries the declared schema (``schema.py``: data
         columns in file order, then ``series`` string and ``day``
@@ -605,7 +511,7 @@ class RefluxEngine:
         schema = (
             MEASUREMENTS_TYPED_READ_SCHEMA if self.typed_fields else MEASUREMENTS_READ_SCHEMA
         )
-        root = self._path
+        root = self._data.resolve(version)
         path = root if series is None else _series_dir(root, series)
         if not os.path.exists(path):
             return self.spark.createDataFrame([], schema)
@@ -993,14 +899,8 @@ class RefluxEngine:
 
         # same pointer-file commit as compact(): rewrite to a fresh
         # version dir, go live with one small-file PUT, vacuum the old
-        new_dir, commit = vp.begin_rewrite()
-        try:
+        with vp.rewrite() as new_dir:
             df.write.mode("overwrite").parquet(new_dir)
-            commit()
-        except BaseException:
-            # see compact(): discard the claimed dir on in-process failure
-            shutil.rmtree(new_dir, ignore_errors=True)
-            raise
         vp.vacuum()
         with open(manifest_path, "w") as f:
             # bucket grain recorded so rollup_fresh can refuse to serve
@@ -1079,8 +979,7 @@ class RefluxEngine:
         else:
             df = explode_tags(self._table())
 
-        new_dir, commit = vp.begin_rewrite()
-        try:
+        with vp.rewrite() as new_dir:
             (
                 # range-cluster by value WITHIN each (series, key)
                 # partition: every output file then covers a contiguous
@@ -1095,10 +994,6 @@ class RefluxEngine:
                 .partitionBy("series", "key")
                 .parquet(new_dir)
             )
-            commit()
-        except BaseException:
-            shutil.rmtree(new_dir, ignore_errors=True)
-            raise
         vp.vacuum()
         with open(manifest_path, "w") as f:
             json.dump({"partitions": manifest}, f)
@@ -1253,6 +1148,54 @@ class RefluxEngine:
             .filter(F.col("time").between(F.lit(start_ts), F.lit(end_ts)))
             .select(*cols)
         )
+
+
+def _write_sorted(df: DataFrame, path: str) -> None:
+    """Append ``df`` to the (series, day)-partitioned table at ``path``
+    with rows time-sorted inside every file, so each file's row-group
+    min/max statistics let a time-range scan skip pages (SCALE.md §1).
+    The one partitioned write of the engine: appends, compaction and
+    erasure all land their rows through it."""
+    (
+        df.sortWithinPartitions("series", "day", "time")
+        # "day" rides the sort deliberately: the dynamic-partition
+        # writer requires ordering on (series, day) and INSERTS ITS
+        # OWN (order-destroying) sort unless the child ordering
+        # already satisfies it — (series, time) alone does not
+        # satisfy it syntactically even though day derives from
+        # time, and the writer sort scrambled file row order
+        # (caught by test_measurements_files_time_sorted_with_stats)
+        .write.mode("append")
+        .partitionBy("series", "day")
+        .parquet(path)
+    )
+
+
+def _link_partitions(src: str, dst: str, keep) -> None:
+    """Hardlink the data files of every (series, day) partition of the
+    table at ``src`` for which ``keep(series, day)`` holds into the
+    same place under ``dst`` (``day`` as its ISO directory string). No
+    data bytes move; on S3/GCS the equivalent is a server-side COPY.
+    Falls back to a real file copy when the filesystem refuses links."""
+    for series_ent in os.listdir(src):
+        sdir = os.path.join(src, series_ent)
+        if not series_ent.startswith("series=") or not os.path.isdir(sdir):
+            continue
+        series = _unescape_partition_value(series_ent[len("series="):])
+        for day_ent in os.listdir(sdir):
+            if not day_ent.startswith("day=") or not keep(series, day_ent[len("day="):]):
+                continue
+            src_part = os.path.join(sdir, day_ent)
+            dst_part = os.path.join(dst, series_ent, day_ent)
+            os.makedirs(dst_part, exist_ok=True)
+            for f in os.listdir(src_part):
+                if f.startswith(("_", ".")):
+                    continue
+                s, d = os.path.join(src_part, f), os.path.join(dst_part, f)
+                try:
+                    os.link(s, d)
+                except OSError:
+                    shutil.copy2(s, d)
 
 
 # Hive/Spark escape special characters in partition directory names as

@@ -265,9 +265,11 @@ class UDPLineServer:
             self._flush_locked()
 
     def stop(self) -> None:
-        self.flush()
+        """Stop serving, wait for in-flight handlers, then flush — a
+        datagram handled during shutdown still reaches the table."""
         self._server.shutdown()
-        self._server.server_close()
+        self._server.server_close()  # joins handler threads (block_on_close)
+        self.flush()
 
 
 def send_udp_line(line: str, host: str = "127.0.0.1", port: int = 8089) -> None:

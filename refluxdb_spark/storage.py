@@ -39,6 +39,8 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 
 class ConcurrentRewriteError(RuntimeError):
@@ -48,8 +50,7 @@ class ConcurrentRewriteError(RuntimeError):
 class VersionedPath:
     """A logical table directory whose physical location is resolved
     through a pointer file. ``current()`` is the live data dir;
-    ``begin_rewrite()`` hands out the next version dir and a commit
-    callback."""
+    ``rewrite()`` hands out the next version dir and commits it."""
 
     def __init__(self, base: str) -> None:
         self.base = base
@@ -126,6 +127,21 @@ class VersionedPath:
                 "orphan (clear_orphans() discards uncommitted versions)"
             ) from None
         return new_dir, _Commit(self, next_v, base_v)
+
+    @contextmanager
+    def rewrite(self) -> Iterator[str]:
+        """``with vp.rewrite() as new_dir:`` — write the full new table
+        under ``new_dir``; a clean exit commits it. An in-process
+        failure (failed write, stale-pointer commit) discards the
+        claimed dir and re-raises, so it cannot wedge later rewrites;
+        only a genuinely concurrent or crashed claim fails fast."""
+        new_dir, commit = self.begin_rewrite()
+        try:
+            yield new_dir
+            commit()
+        except BaseException:
+            shutil.rmtree(new_dir, ignore_errors=True)
+            raise
 
     def _commit(self, version: int, expected_base: int) -> None:
         # Conditional commit: if the pointer moved since begin_rewrite,

@@ -5,8 +5,9 @@ path (``udpserver.rs:16-91``, ``handlers.rs:100-145``, ``main.rs:23``)
 with micro-batch streaming:
 
 - ``stream_ingest_lines``: file/socket text stream -> line-protocol
-  parse (same column expressions as batch) -> field explode ->
-  ``foreachBatch`` append into the engine's lake table. Checkpointing
+  parse (same column expressions as batch) -> ``foreachBatch`` into
+  the engine's one append (field explode, dead letters, time-sorted
+  write), the same code ``write_lines`` runs. Checkpointing
   makes ingest restartable/idempotent-per-batch — the property the
   reference's global Mutex was (weakly) standing in for.
 - ``stream_rollup``: watermarked tumbling-window pre-aggregation — the
@@ -29,12 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from refluxdb_spark.engine import RefluxEngine
-from refluxdb_spark.sources.lineprotocol import (
-    explode_fields,
-    explode_typed_fields,
-    parse_lines_df,
-    parse_lines_typed_df,
-)
+from refluxdb_spark.sources.lineprotocol import parse_lines_df, parse_lines_typed_df
 
 
 def stream_ingest_lines(
@@ -47,6 +43,12 @@ def stream_ingest_lines(
     """Stream line-protocol text files from ``lines_dir`` into the
     engine's measurements table via foreachBatch append.
 
+    Each micro-batch goes through the same append as ``write_lines``:
+    one time-sorted write job whose observed counts also give the
+    dead-letter total, and a dead-letter write only when a line was
+    rejected. A batch therefore lands exactly the rows and dead
+    letters the same lines posted to ``write_lines`` would.
+
     ``record_metrics=True`` meters each micro-batch through the
     engine's observe()-based ingest ledger (rows, nulls, event-time
     bounds — computed by the write job itself, no second scan), the
@@ -58,22 +60,10 @@ def stream_ingest_lines(
     way ``write_lines`` does."""
     raw = engine.spark.readStream.format("text").load(lines_dir)
     parse = parse_lines_typed_df if engine.typed_fields else parse_lines_df
-    explode = explode_typed_fields if engine.typed_fields else explode_fields
     parsed = parse(raw)
 
     def _append(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.cache()
-        try:
-            engine.write_dataframe(
-                explode(batch_df), record_metrics=record_metrics
-            )
-            bad = batch_df.filter(batch_df.error.isNotNull())
-            # DataFrame isEmpty stays in the codegen path; .rdd.isEmpty()
-            # would deoptimize and launch an extra job per micro-batch
-            if not bad.isEmpty():
-                engine.write_dead_letters(bad)
-        finally:
-            batch_df.unpersist()
+        engine._append_lines(batch_df, record_metrics=record_metrics)
 
     writer = (
         parsed.writeStream.foreachBatch(_append)

@@ -626,9 +626,11 @@ def test_write_dataframe_observed_metrics(spark, tmp_path):
     assert eng.ingest_metrics().count() == 1
 
 
-def test_measurements_files_time_sorted_with_stats(spark, tmp_path):
+@pytest.mark.parametrize("layout", ["after_compaction", "one_write_batch"])
+def test_measurements_files_time_sorted_with_stats(spark, tmp_path, layout):
     """SCALE.md §1's range-scan claim, physically fenced: after
-    compaction every parquet file in a (series, day) partition carries
+    compaction, and straight from one out-of-order ``write_lines``
+    batch, every parquet file in a (series, day) partition carries
     time min/max statistics and its row groups are internally sorted
     and mutually ordered on time — what turns a time-range scan into
     row-group/page skips."""
@@ -637,10 +639,14 @@ def test_measurements_files_time_sorted_with_stats(spark, tmp_path):
     import pyarrow.parquet as pq
 
     eng = RefluxEngine(spark, str(tmp_path / "wh_sorted"))
-    # interleaved timestamps across appends; same series+day
-    for i in (5, 1, 9, 3, 7):
-        eng.write_lines([f"s v={i}.0 {1700000000000000000 + i * 10**6}"])
-    eng.compact()
+    # interleaved timestamps; same series+day
+    lines = [f"s v={i}.0 {1700000000000000000 + i * 10**6}" for i in (5, 1, 9, 3, 7)]
+    if layout == "after_compaction":
+        for ln in lines:
+            eng.write_lines([ln])
+        eng.compact()
+    else:
+        assert eng.write_lines(lines) == (5, 0)
     files = glob.glob(eng._path + "/**/*.parquet", recursive=True)
     assert files
     for f in files:
@@ -1074,6 +1080,42 @@ def test_partition_values_keep_their_string_type(spark, tmp_path):
             (n, i + 1.0) for i, n in enumerate(names)
         ]
         assert eng.field_keys() == {n: ["v"] for n in names}
+        # a retained version reads through the same declared schema
+        eng.compact(vacuum=False)
+        old = eng.table_as_of(eng.table_versions()[0])
+        assert old.schema["series"].dataType.simpleString() == "string"
+        assert sorted(r.series for r in old.collect()) == sorted(names)
+
+
+def test_clean_write_runs_at_most_two_spark_jobs(spark, tmp_path):
+    """A clean multi-series ``write_lines`` batch is one shuffled write:
+    the shuffle stage plus the write stage, with the row and
+    dead-letter counts observed on it — no count or cache job."""
+    eng = RefluxEngine(spark, str(tmp_path / "wh"))
+    lines = [
+        f"s{i % 4},host=h{i % 3} v={i}.0,w={i} {1700000000000000000 + (99 - i) * 10**9}"
+        for i in range(100)
+    ]
+    (written, rejected), jobs = _with_jobs(spark, lambda: eng.write_lines(lines))
+    assert (written, rejected) == (200, 0)
+    assert len(jobs) <= 2, jobs
+    assert eng.list_series() == ["s0", "s1", "s2", "s3"]
+
+
+def test_erase_escaped_series_name_rewrites_not_links(spark, tmp_path):
+    """A series whose directory name is Hive-escaped (``a:b`` lives in
+    ``series=a%3Ab``) is recognised as affected: its partition is
+    rewritten without the erased row, not hardlinked over unchanged."""
+    eng = RefluxEngine(spark, str(tmp_path / "wh"))
+    eng.write_lines([
+        "a:b,host=x v=1.0 1700000000000000000",
+        "a:b,host=y v=2.0 1700000001000000000",
+    ])
+    assert eng.erase("tags['host'] = 'y'") == {
+        "erased": 1, "rewritten_partitions": 1, "kept": 1,
+    }
+    got = eng.range("a:b", "2000-01-01T00:00:00Z", "2100-01-01T00:00:00Z")
+    assert [r.value for r in got.collect()] == [1.0]
 
 
 def test_range_and_view_rebuild_run_no_spark_job(spark, tmp_path, engine):

@@ -139,6 +139,25 @@ def test_udp_ingest_and_echo(served):
     assert [(r["name"], r["value"]) for r in rows] == [("value", 1.5)]
 
 
+def test_udp_stop_flushes_datagram_handled_during_shutdown(spark, tmp_path):
+    """``stop()`` flushes after the server has stopped and its handler
+    threads have finished, so a line buffered during shutdown is
+    written, not dropped."""
+    eng = RefluxEngine(spark, str(tmp_path / "wh_udp_stop"))
+    udp = UDPLineServer(eng, port=0).start()
+    shutdown = udp._server.shutdown
+
+    def late_datagram_then_shutdown():
+        with udp._lock:
+            udp._buf.append("late v=1.0 1700000000000000000")
+        shutdown()
+
+    udp._server.shutdown = late_datagram_then_shutdown
+    udp.stop()
+    rows = eng.query_rows("SELECT value FROM late")
+    assert [r["value"] for r in rows] == [1.0]
+
+
 def test_udp_bad_line_echoes_error(served):
     _, _, udp = served
     with socket.socket(socket.AF_INET, socket.SOCK_DGRAM) as s:

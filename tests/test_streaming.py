@@ -3,6 +3,7 @@ measurements table; streaming rollup == batch rollup."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from refluxdb_spark.engine import RefluxEngine
@@ -77,6 +78,35 @@ def test_stream_ingest_routes_dead_letters(spark, tmp_path):
     assert len(eng.query_rows("SELECT * FROM ok")) == 1
     dlq = eng.dead_letters().collect()
     assert len(dlq) == 1 and dlq[0].raw.startswith("nope")
+
+
+@pytest.mark.parametrize("lines", [
+    ["ok,host=a v=1.0,w=2.0 1700000000000000000", "nope v=abc 1700000000000000000",
+     "ok v=3.0 1700000001000000000", "missing_ts v=1.0"],
+    ["nope v=abc 1700000000000000000", "missing_ts v=1.0"],
+], ids=["mixed", "all_dead_letters"])
+def test_stream_and_batch_ingest_agree(spark, tmp_path, lines):
+    """``write_lines`` and ``stream_ingest_lines`` are one append: the
+    same lines give the same (written, rejected) counts and the same
+    dead-letter rows, also when every line is rejected."""
+    batch = RefluxEngine(spark, str(tmp_path / "wh_batch"))
+    written, rejected = batch.write_lines(lines)
+
+    lines_dir = tmp_path / "lines"
+    lines_dir.mkdir()
+    (lines_dir / "batch.txt").write_text("\n".join(lines) + "\n")
+    streamed = RefluxEngine(spark, str(tmp_path / "wh_stream"))
+    stream_ingest_lines(streamed, str(lines_dir), str(tmp_path / "ck")).awaitTermination()
+
+    assert (streamed._table().count(), streamed.dead_letters().count()) == (
+        written, rejected
+    )
+    assert rejected == 2
+
+    def dead(eng):
+        return sorted((r.error, r.raw) for r in eng.dead_letters().collect())
+
+    assert dead(streamed) == dead(batch)
 
 
 def test_stream_dedup_within_watermark(spark, tmp_path):
