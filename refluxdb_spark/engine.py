@@ -29,9 +29,11 @@ Compat flags (quirk register, SURVEY §7):
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
+import weakref
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -53,6 +55,11 @@ from refluxdb_spark.sources.lineprotocol import (
 )
 
 _TABLE = "measurements"
+
+# Temp views are per SparkSession, but engines sharing one session name
+# their series views alike: session -> {view: the engine that built it
+# last}, all held weakly, so a dropped session or engine owns nothing.
+_VIEW_OWNERS = weakref.WeakKeyDictionary()
 
 
 def _ROLLUP_AGGS() -> list:
@@ -136,10 +143,24 @@ class RefluxEngine:
         Spark shape of the reference's per-datagram loop
         (``udpserver.rs:33-49`` / ``handlers.rs:112-134``), without the
         global mutex (``main.rs:23``).
+
+        The lines enter the plan as ONE JSON string literal that the JVM
+        parses and explodes into one row per element (one partition), so
+        no Python RDD is built and no Python worker runs — a
+        ``createDataFrame`` of a list would ship the batch through
+        ``parallelize`` and Python workers. Each element stays exactly
+        one row, whatever newlines, quotes or non-ASCII text it holds.
         """
         if not lines:
             return 0, 0
-        raw = self.spark.createDataFrame([(ln,) for ln in lines], "value string")
+        raw = self.spark.range(1, numPartitions=1).select(
+            F.explode(
+                # FAILFAST: a malformed literal raises instead of
+                # reading as null, which explode would turn into no rows
+                F.from_json(F.lit(json.dumps(lines)), "array<string>",
+                            {"mode": "FAILFAST"})
+            ).alias("value")
+        )
         return self.write_lines_dataframe(raw)
 
     def write_lines_dataframe(self, raw: DataFrame, line_col: str = "value") -> tuple[int, int]:
@@ -175,9 +196,15 @@ class RefluxEngine:
         time-sorted file per partition it touches. The batch metrics
         (rows, null_values, min/max event time in micros) come from a
         ``Dataset.observe`` on that write job itself — no second scan.
-        ``record_metrics`` also appends them to the ingest ledger."""
+        ``record_metrics`` also appends them to the ingest ledger.
+
+        The shuffle width is the session's ``spark.sql.shuffle.partitions``,
+        given explicitly: AQE never coalesces a repartition by number,
+        whereas it would collapse a small write's shuffle onto ONE
+        writer task that writes every (series, day) file in turn."""
         obs = Observation()
-        out = self._finalize_rows(rows).repartition("series", "day").observe(
+        width = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        out = self._finalize_rows(rows).repartition(width, "series", "day").observe(
             obs,
             F.count(F.lit(1)).alias("rows"),
             F.sum(F.when(F.col("value").isNull(), 1).otherwise(0)).alias(
@@ -570,6 +597,7 @@ class RefluxEngine:
 
     def _ensure_views(self, tables: list[str]) -> None:
         known = set(self.list_series())
+        owners = _VIEW_OWNERS.setdefault(self.spark, weakref.WeakValueDictionary())
         for t in tables:
             if t in known and "." in t:
                 # A series literally named with a dot (e.g. "cpu.load")
@@ -582,14 +610,15 @@ class RefluxEngine:
                     "use range()/the DataFrame API for this series"
                 )
             base = t.split(".")[-1]
+            # (re)create the view if data changed since — it pins a file
+            # listing, so writes invalidate it — or if another engine on
+            # this session has since replaced it with its own rows
+            fresh = base in self._views and owners.get(base) is self
             if base in known:
-                # (re)create the series view if data changed since —
-                # the view pins a file listing, so writes invalidate it
-                if base not in self._views:
+                if not fresh:
                     self._table(base).filter(F.col("series") == base).drop(
                         "series", "day"
                     ).createOrReplaceTempView(base)
-                    self._views.add(base)
             elif (
                 base.endswith("_tags")
                 and base[: -len("_tags")] in known
@@ -600,17 +629,18 @@ class RefluxEngine:
                 # the reference's TODO table, queryable by its declared
                 # name and DDL shape — ``<ts>_tags (id, key, value)``
                 # (README.md:55) — backed by the maintained tag index
-                if base not in self._views:
+                if not fresh:
                     self.tag_index_df().filter(
                         F.col("series") == base[: -len("_tags")]
                     ).select("id", "key", "value").createOrReplaceTempView(base)
-                    self._views.add(base)
             elif self.spark.catalog.tableExists(base):
                 continue  # separately-registered view (rollups etc.)
             else:
                 # Q12 fix: unknown table is a clean error, not a panic
                 # (reference .unwrap()s the registry lookup, persistence.rs:199).
                 raise TableNotFoundError(f"table not found: {base}")
+            self._views.add(base)
+            owners[base] = self
 
     def query(self, q: str, prefer_rollup: bool = False) -> DataFrame:
         """``POST /query`` (``handlers.rs:70-93`` /
@@ -662,8 +692,6 @@ class RefluxEngine:
         matches the live table's — i.e. serving a query from it loses
         nothing. Metadata-only (two listdirs per partition + one small
         JSON read); no data touched."""
-        import json
-
         from refluxdb_spark.storage import VersionedPath
 
         manifest_path = os.path.join(self.warehouse, name + "._manifest.json")
@@ -834,8 +862,6 @@ class RefluxEngine:
         At 100 TB this is the difference between re-reading a day and
         re-reading a year — the catalog equivalent is incremental
         OPTIMIZE/REFRESH on a partition-change log."""
-        import json
-
         from refluxdb_spark.operators.timeseries import time_bucket
         from refluxdb_spark.storage import VersionedPath
 
@@ -930,8 +956,6 @@ class RefluxEngine:
         the result commits via the same pointer-file version swap
         (object-store safe, crash leaves the old index live).
         """
-        import json
-
         from refluxdb_spark.storage import VersionedPath
 
         vp = VersionedPath(os.path.join(self.warehouse, "tag_index"))
@@ -1002,8 +1026,6 @@ class RefluxEngine:
         """True iff the tag index exists and its saved (series, day)
         manifest matches the live table's — metadata-only, like
         ``rollup_fresh``."""
-        import json
-
         from refluxdb_spark.storage import VersionedPath
 
         vp = VersionedPath(os.path.join(self.warehouse, "tag_index"))

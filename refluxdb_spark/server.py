@@ -162,8 +162,12 @@ class _Handler(BaseHTTPRequestHandler):
                 return
             body = self.rfile.read(int(length)).decode("utf-8", errors="replace")
             if url.path == "/write":
-                # POST /write (handlers.rs:100-145); body may hold many lines
-                lines = [ln for ln in body.splitlines() if ln.strip()]
+                # POST /write (handlers.rs:100-145); body may hold many
+                # lines, split on "\n" only: str.splitlines would also
+                # break inside a tag value at \x0b, \x85, U+2028, ...
+                lines = [
+                    ln.removesuffix("\r") for ln in body.split("\n") if ln.strip()
+                ]
                 # rejected = COUNT; payloads live in the dead-letter
                 # table (engine.dead_letters()), never on the driver
                 n, n_dead = self.engine.write_lines(lines)

@@ -6,7 +6,7 @@ the window). No Spark session needed — the emit function is pure."""
 
 import json
 
-from bench import HEADLINE, emit_lines
+from bench import HEADLINE, TAIL_SUMMARY_BUDGET, emit_lines
 from refluxdb_spark.queries import ORACLES, QUERIES
 
 
@@ -84,6 +84,33 @@ def test_summary_line_fits_driver_tail_window():
     assert min(sub.values()) >= max(omitted.values())
     assert summary["q_omitted"] == len(omitted)
     assert summary["q_omitted_sec"] == round(sum(omitted.values()), 3)
+
+
+def test_summary_line_fits_when_omitted_sum_prints_wider():
+    """The fill reserves ``q_omitted_sec`` at the total's width, but the
+    final omitted sum can print wider: a total of 49.0 can leave 48.999
+    omitted. A slowest entry that fits only under the narrow reserve
+    must be dropped again, so the final line stays within the budget."""
+    rest = {f"q{i:05d}": 0.001 for i in range(48999)}  # total 49.0
+
+    def final(n: int) -> str:
+        return emit_lines({"a" * n: 0.001, **rest}, reps=3, calibration=0.28, sf=0.1)[-1]
+
+    # a name too long to fit gives the line with no query; the name
+    # that fills it to exactly the budget under the 49.0 reserve is the
+    # width-swap case (its entry costs the name plus '"": 0.001')
+    edge = TAIL_SUMMARY_BUDGET - len(final(TAIL_SUMMARY_BUDGET)) - len('"": 0.001')
+    for n in (edge - 1, edge):
+        line = final(n)
+        summary = json.loads(line)
+        assert len(line) <= TAIL_SUMMARY_BUDGET, (n, len(line))
+        assert summary["value"] == 49.0
+        assert summary["queries"] == {}
+        assert (summary["q_omitted"], summary["q_omitted_sec"]) == (49000, 49.0)
+    # one char shorter still than the swap needs: the entry stays
+    summary = json.loads(final(edge - 2))
+    assert list(summary["queries"]) == ["a" * (edge - 2)]
+    assert (summary["q_omitted"], summary["q_omitted_sec"]) == (48999, 48.999)
 
 
 def test_headline_names_are_registered_and_oracled():

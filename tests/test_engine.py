@@ -1102,6 +1102,90 @@ def test_clean_write_runs_at_most_two_spark_jobs(spark, tmp_path):
     assert eng.list_series() == ["s0", "s1", "s2", "s3"]
 
 
+def test_write_runs_no_python_worker_and_spreads_its_files(spark, tmp_path):
+    """A ``write_lines`` batch is built on the JVM (no Python RDD scan
+    in the raw-lines plan), still runs at most two jobs, writes with
+    one task per ``spark.sql.shuffle.partitions`` (AQE does not collapse
+    it onto one writer), and adds one file per (series, day) touched."""
+    from datetime import datetime, timezone
+
+    eng = RefluxEngine(spark, str(tmp_path / "wh"))
+    ts = [1700000000000000000 + i * 3600 * 10**9 for i in range(100)]  # 100 h
+    lines = [f"s{i % 4},host=h{i % 3} v={i}.0 {t}" for i, t in enumerate(ts)]
+    raws = []
+    write_raw = eng.write_lines_dataframe
+    eng.write_lines_dataframe = lambda raw: raws.append(raw) or write_raw(raw)
+    (written, rejected), jobs = _with_jobs(spark, lambda: eng.write_lines(lines))
+    assert (written, rejected) == (100, 0)
+    assert len(jobs) <= 2, jobs
+    plan = raws[0]._jdf.queryExecution().toString()
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+
+    tracker = spark.sparkContext.statusTracker()
+    write_stage = max(tracker.getJobInfo(max(jobs)).stageIds)
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert tracker.getStageInfo(write_stage).numTasks == width
+
+    pairs = {
+        (f"s{i % 4}", datetime.fromtimestamp(t // 10**9, timezone.utc).date())
+        for i, t in enumerate(ts)
+    }
+    files = [
+        f for _, _, fs in os.walk(eng._path) for f in fs if f.endswith(".parquet")
+    ]
+    assert len(pairs) > width  # more files than writer tasks
+    assert len(files) == len(pairs)
+
+
+def test_write_lines_keeps_every_element_exactly(spark, tmp_path):
+    """Each ``write_lines`` element becomes its parsed rows or exactly
+    one dead letter whose ``raw`` is the element, whatever it holds:
+    non-ASCII text, quotes, backslashes, an embedded newline (a UDP
+    datagram stays one line), or nothing but blanks. A batch of the
+    serve preload size keeps every line."""
+    eng = RefluxEngine(spark, str(tmp_path / "wh"))
+    bad = [
+        'cpu v="str\\"q" 1700000002000000000',
+        "cpu v=1.0\nmem v=2.0 1700000003000000000",
+        "   ",
+    ]
+    good = [
+        "cpu,host=zürich,note=中文 v=1.5 1700000000000000000",
+        'cpu,path=C:\\dir,q="x" v=2.0 1700000001000000000',
+    ]
+    assert eng.write_lines(good[:1] + bad + good[1:]) == (2, 3)
+    rows = sorted((r.value, r.tags) for r in eng._table().collect())
+    assert rows == [
+        (1.5, {"host": "zürich", "note": "中文"}),
+        (2.0, {"path": "C:\\dir", "q": '"x"'}),
+    ]
+    dead = sorted((r.raw, r.error) for r in eng.dead_letters().collect())
+    assert dead == sorted([
+        (bad[0], "non-numeric field value"),
+        (bad[1], "bad timestamp"),
+        (bad[2], "empty line"),
+    ])
+
+    batch = [f"bulk,k=k{i % 7} v={i}.0 {1700000000000000000 + i}" for i in range(1500)]
+    assert eng.write_lines(batch) == (1500, 0)
+    assert eng.query_rows("SELECT count(*) AS n, sum(value) AS s FROM bulk") == [
+        {"n": 1500, "s": float(sum(range(1500)))}
+    ]
+
+
+def test_engines_sharing_a_session_serve_their_own_series_views(spark, tmp_path):
+    """Temp views are per session: two engines on one session that both
+    hold series ``cpu`` each answer ``FROM cpu`` from their own rows,
+    however their queries interleave."""
+    a = RefluxEngine(spark, str(tmp_path / "wh_a"))
+    b = RefluxEngine(spark, str(tmp_path / "wh_b"))
+    a.write_lines(["cpu v=1.0 1700000000000000000"])
+    b.write_lines(["cpu v=2.0 1700000000000000000", "cpu v=3.0 1700000001000000000"])
+    for eng, want in [(a, [1.0]), (b, [2.0, 3.0]), (a, [1.0]), (a, [1.0]), (b, [2.0, 3.0])]:
+        got = eng.query_rows("SELECT value FROM cpu ORDER BY value")
+        assert [r["value"] for r in got] == want
+
+
 def test_erase_escaped_series_name_rewrites_not_links(spark, tmp_path):
     """A series whose directory name is Hive-escaped (``a:b`` lives in
     ``series=a%3Ab``) is recognised as affected: its partition is

@@ -60,6 +60,22 @@ def test_write_rejects_bad_lines(served):
     assert code == 400 and out["rejected"] == 1
 
 
+def test_write_splits_body_on_newline_only(served):
+    """A body splits into lines at "\n" only (one trailing "\r"
+    dropped): a tag value holding U+2028, which ``str.splitlines``
+    treats as a line break, stays inside its one line."""
+    eng, port, _ = served
+    line = "sep2028,host=a\u2028b v=1.0 1700000000000000000"
+    body = f"{line}\r\n\r\nsep2028 v=2.0 1700000001000000000\r\n"
+    code, out = _http("POST", port, "/write", body)
+    assert (code, out) == (200, {"written": 2, "rejected": 0})
+    rows = eng.query_rows("SELECT value, tags FROM sep2028 ORDER BY value")
+    assert rows == [
+        {"value": 1.0, "tags": {"host": "a\u2028b"}},
+        {"value": 2.0, "tags": {}},
+    ]
+
+
 def test_query_validation_errors(served):
     _, port, _ = served
     code, out = _http("POST", port, "/query", "q=DROP TABLE test")
