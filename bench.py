@@ -20,21 +20,10 @@ round-over-round comparison via scripts/bench_compare.py.
 Each query is executed to completion (count() materializes every
 operator in the plan) after a warm-up of the input files' footers.
 
-Since r18 the bench can also record an executor-CPU axis: per-query
-executorCpuTime scraped from the UI REST API (the same endpoint the
-byte gate uses), per rep. CPU is insensitive to the scheduler stalls
-and box contention that spread same-code WALL totals 50%+ on this
-host, so the round gate cites byte ratio + CPU ratio together;
-per-query CPU rides the full record (bench_latest.json, committed
-per round), cpu_total_sec rides the tail-surviving summary line, and
-diffs run via `scripts/bench_compare.py --cpu`.
-
-Since r19 the CPU axis is OPT-IN via $SPARK_GRAFT_CPU_AXIS=1: the
-scrape requires spark.ui.enabled=true, and the UI listener/status
-store rides INSIDE every timed query — r17 benched UI-off, so the
-r17↔r18 wall comparison silently mixed media (VERDICT r18 item 1).
-The default wall bench now runs UI-off exactly like r17; a CPU-axis
-run is a separate, explicitly-flagged invocation.
+Every rep also records executor CPU, read with the Spark UI off from
+the drained status store (refluxdb_spark.profile): per-query CPU rides
+the full record, cpu_total_sec the summary line, and
+`scripts/bench_compare.py --cpu` diffs it.
 
 Also since r19 the FINAL summary line carries a driver-parseable
 "queries" dict holding the SLOWEST queries that fit the tail window
@@ -56,6 +45,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from refluxdb_spark import profile  # noqa: E402
 from refluxdb_spark.queries import QUERIES  # noqa: E402
 from refluxdb_spark.session import get_spark  # noqa: E402
 
@@ -230,66 +220,10 @@ HEADLINE = [
 ]
 
 
-def _ui_stages(spark) -> list[dict]:
-    """Completed/active stage list via the UI REST API (the same
-    endpoint the exchange-bytes gate scrapes)."""
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    with urllib.request.urlopen(
-        f"{ui}/api/v1/applications/{app_id}/stages", timeout=10
-    ) as r:
-        return json.loads(r.read())
-
-
-def _settled_new_cpu_ns(spark, before: set, deadline_s: float = 10.0):
-    """Sum executorCpuTime (ns) over stages not in ``before``, polling
-    until the new-stage set and its CPU sum are stable across two
-    consecutive reads with no stage still ACTIVE/PENDING (the status
-    store is fed asynchronously — same poll the byte gate uses).
-    Returns (new_stage_ids, cpu_ns, settled)."""
-    prev = None
-    deadline = time.time() + deadline_s
-    while True:
-        stages = _ui_stages(spark)
-        new = [
-            s for s in stages if (s["stageId"], s["attemptId"]) not in before
-        ]
-        cpu = sum(s.get("executorCpuTime", 0) for s in new)
-        snap = (
-            tuple(sorted((s["stageId"], s["attemptId"]) for s in new)),
-            cpu,
-        )
-        settled = all(
-            s.get("status") not in ("ACTIVE", "PENDING") for s in new
-        )
-        if snap == prev and settled:
-            return {(s["stageId"], s["attemptId"]) for s in new}, cpu, True
-        if time.time() > deadline:
-            return {(s["stageId"], s["attemptId"]) for s in new}, cpu, False
-        prev = snap
-        time.sleep(0.1)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    # CPU axis (executorCpuTime scraped per query from the UI REST API)
-    # is OPT-IN: it needs spark.ui.enabled=true, whose listener/status
-    # store overhead rides inside every timed query — r17 benched
-    # UI-off, and enabling it unconditionally in r18 broke wall
-    # comparability (VERDICT r18 item 1). Default = UI off, wall-only,
-    # the same measurement medium as r17.
-    cpu_axis = os.environ.get("SPARK_GRAFT_CPU_AXIS", "") == "1"
-    spark = get_spark(
-        app_name="refluxdb_spark_bench",
-        extra_conf=(
-            {"spark.ui.enabled": "true", "spark.ui.port": "4098"}
-            if cpu_axis
-            else {}
-        ),
-    )
+    spark = get_spark(app_name="refluxdb_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     # Warm-up: JIT/classloading + parquet footer reads, so timings
@@ -367,57 +301,31 @@ def main() -> None:
     timings: dict[str, float] = {}
     timings_cpu: dict[str, float] = {}
     rep_counts: dict[str, int] = {}
-    cpu_ok = cpu_axis
-    seen: set = set()
-    if cpu_axis:
-        try:
-            seen, _, _ = _settled_new_cpu_ns(spark, set())
-        except Exception as e:  # UI scrape unavailable: wall-only bench
-            print(f"# cpu axis disabled (UI scrape failed: {e})", file=sys.stderr)
-            cpu_ok = False
-    else:
-        print(
-            "# cpu axis off (wall-only, UI disabled; set "
-            "SPARK_GRAFT_CPU_AXIS=1 to enable)",
-            file=sys.stderr,
-        )
     for name in HEADLINE:
         fn = QUERIES[name]
         samples = []
+        cpu = []
         n = 0
 
         def _run() -> None:
             nonlocal n
             spark.catalog.clearCache()
-            t0 = time.time()
-            n = fn(spark, sf_dir).count()
-            samples.append(time.time() - t0)
+            n, prof = profile.run(spark, lambda: fn(spark, sf_dir).count())
+            samples.append(prof["wall_s"])
+            cpu.append(prof["cpu_s"])
 
         for _ in range(reps):
             _run()
         if sorted(samples)[len(samples) // 2] < subsec_floor:
             while len(samples) < subsec_reps:
                 _run()
+        timings_cpu[name] = round(sum(cpu) / len(cpu), 3)
         samples.sort()
         timings[name] = round(samples[len(samples) // 2], 3)
         rep_counts[name] = len(samples)
-        cpu_note = ""
-        if cpu_ok:
-            try:
-                new_ids, cpu_ns, settled = _settled_new_cpu_ns(spark, seen)
-                seen |= new_ids
-                # total executor CPU across ALL reps of this query,
-                # divided by the rep count -> per-execution CPU sec
-                timings_cpu[name] = round(cpu_ns / 1e9 / len(samples), 3)
-                cpu_note = f", cpu {timings_cpu[name]}s/rep" + (
-                    "" if settled else " UNSETTLED"
-                )
-            except Exception as e:
-                cpu_ok = False
-                timings_cpu.clear()
-                print(f"# cpu axis disabled mid-run ({e})", file=sys.stderr)
         print(
-            f"# {name}: median {timings[name]}s of {[round(s, 3) for s in samples]} ({n} rows{cpu_note})",
+            f"# {name}: median {timings[name]}s of {[round(s, 3) for s in samples]} "
+            f"({n} rows, cpu {timings_cpu[name]}s/rep)",
             file=sys.stderr,
         )
 
@@ -442,9 +350,9 @@ def main() -> None:
             calibration,
             os.path.dirname(os.path.abspath(__file__)),
             calibration_end=calibration_end,
-            timings_cpu=timings_cpu or None,
+            timings_cpu=timings_cpu,
         ),
-        timings_cpu=timings_cpu or None,
+        timings_cpu=timings_cpu,
     )
     # record this HEADLINE generation so FUTURE grown-registry rounds
     # can still decode this run's compact line by name
@@ -517,14 +425,19 @@ def decode_prev_artifact(
     path: str, names_registry: dict[str, list[str]] | None = None
 ) -> tuple[dict[str, float], float | None]:
     """Minimal decoder for a prior round's BENCH artifact (driver tail
-    or full record): (timings, last calibration_sec). Timings come from
-    the LAST compact line whose names_md5 resolves — against the
-    CURRENT HEADLINE or any generation in the committed names registry
-    — (last-wins, pairing the final run's timings with the final run's
-    probe); an unresolvable digest decodes to ({}, ...) and the caller
-    skips self-adjudication rather than guess across list drift."""
-    import re as _re
+    or full record): the NEWEST run's (timings, calibration_sec).
 
+    A tail is scanned newest-first. A run record is any line carrying
+    ``calibration_sec`` (its head or its final summary line); the
+    newest one is the run to decode, and it supplies the probe. Its
+    timings come from a compact line met before a SECOND run record —
+    one whose names_md5 resolves against the CURRENT HEADLINE or any
+    generation in the committed names registry. Past a second run
+    record, every compact line belongs to an older run, so the newest
+    summary's slowest-first ``queries`` subset is used instead
+    (partial but real; common_n says how much). Nothing decodable
+    gives ({}, ...) and the caller skips self-adjudication rather than
+    guess across runs or list drift."""
     registry = names_registry if names_registry is not None else load_names_registry()
     text = open(path).read()
     try:
@@ -539,36 +452,30 @@ def decode_prev_artifact(
     except json.JSONDecodeError:
         pass
     timings: dict[str, float] = {}
-    summary_sub: dict[str, float] = {}
+    newest: dict | None = None
     for line in reversed(text.splitlines()):
         try:
             rec = json.loads(line.strip())
         except json.JSONDecodeError:
             continue
-        if (
-            isinstance(rec, dict)
-            and rec.get("metric") == "headline_query_times_compact"
-        ):
+        if not isinstance(rec, dict):
+            continue
+        if rec.get("metric") == "headline_query_times_compact":
             names = registry.get(rec.get("names_md5", ""))
             if names is not None and len(rec.get("values", [])) == len(names):
                 timings = dict(zip(names, (float(v) for v in rec["values"])))
-                break
-        # r19+ tails: the final summary line carries a slowest-first
-        # per-query subset; when the (larger) compact line was pushed
-        # out of the tail window, that subset is the best available
-        # prev-round view — partial but real (common_n says how much).
-        if (
-            not summary_sub
-            and isinstance(rec, dict)
-            and isinstance(rec.get("queries"), dict)
-        ):
-            summary_sub = {
-                str(k): float(v) for k, v in rec["queries"].items()
-            }
-    if not timings:
-        timings = summary_sub
-    hits = _re.findall(r'"calibration_sec": ([0-9.]+)', text)
-    return timings, (float(hits[-1]) if hits else None)
+        elif "calibration_sec" in rec:
+            if newest is not None:
+                break  # a second run: what lies further back is older
+            newest = rec
+        if timings and newest is not None:
+            break
+    if newest is None:
+        return timings, None
+    if not timings and isinstance(newest.get("queries"), dict):
+        timings = {str(k): float(v) for k, v in newest["queries"].items()}
+    cal = newest.get("calibration_sec")
+    return timings, (float(cal) if cal else None)
 
 
 def prev_round_artifact(repo_dir: str) -> str | None:

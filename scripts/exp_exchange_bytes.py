@@ -2,7 +2,8 @@
 
 Runs named queries from ``refluxdb_spark.queries`` to completion and
 sums shuffle-write bytes and records over the stages each query ran,
-via the Spark UI REST API — the ground truth for "what does this plan
+read with the Spark UI off from the drained status store
+(``refluxdb_spark.profile``) — the ground truth for "what does this plan
 actually exchange", independent of wall-clock noise (same-code bench
 totals at sf0.1 spread ±7% run to run; shuffle BYTES are stable to
 <1%, records exactly). Three modes:
@@ -12,8 +13,8 @@ Single query (round-10 shape, one fresh session per invocation):
     python scripts/exp_exchange_bytes.py dedup_minhash_lsh_pairs \
         [/root/testdata/sf0.1]
 
-Record a baseline for a query set (ONE session; per-query attribution
-by diffing the completed-stage set around each run):
+Record a baseline for a query set (ONE session; each query's jobs are
+attributed by the job tag it ran under):
 
     python scripts/exp_exchange_bytes.py --baseline OUT.json \
         [--sf /root/testdata/sf0.1] [name ...]   # default: BASELINE_SET
@@ -24,15 +25,7 @@ item 2). Exit 1 if any query's bytes exceed threshold x baseline
 (with a 64 KiB absolute floor so tiny exchanges can't flag on jitter):
 
     python scripts/exp_exchange_bytes.py --check BASELINE.json \
-        [--sf DIR] [--threshold 1.2] [--out remeasured.json] [--strict]
-
-If the UI status store fails to settle within 15 s around a
-measurement, the row is recorded with ``"settled": false`` (absent
-means trusted) — an undercounted re-measure could otherwise mask a
-real regression in --check. ``--strict`` (what the pytest fence
-passes) turns that condition into a failure: an unsettled baseline
-row rejects the baseline (exit 2, before the sweep), an unsettled
-fresh row counts as a check failure (exit 1).
+        [--sf DIR] [--threshold 1.2] [--out remeasured.json]
 
 For artifact-vs-artifact byte diffs without re-measuring, see
 ``scripts/bench_compare.py --bytes``.
@@ -43,11 +36,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from refluxdb_spark import profile  # noqa: E402
 from refluxdb_spark.queries import QUERIES  # noqa: E402
 from refluxdb_spark.session import get_spark  # noqa: E402
 
@@ -121,18 +113,12 @@ WARM_REQUIRED = {
 ABS_FLOOR_BYTES = 64 * 1024
 
 
-def _get(url: str):
-    with urllib.request.urlopen(url, timeout=10) as r:
-        return json.loads(r.read())
-
-
-def _ui_session(name: str):
-    """A session with the UI REST API enabled (the shared builder
-    disables the UI; this experiment is its only consumer).
+def _session(name: str):
+    """The measurement session (UI off, like every session).
 
     Driver heap defaults to 16g here (engine default: 8g): a
     measurement session lives through dozens of heavy queries with the
-    UI status store retaining every stage/task for attribution, and at
+    status store retaining every stage/task for attribution, and at
     the x100 leg that aging pushed a mid-size broadcast build over the
     8g driver's free-heap check ("Not enough memory to build and
     broadcast") — the same query passes in a fresh 8g session, so this
@@ -140,8 +126,6 @@ def _ui_session(name: str):
     spark = get_spark(
         app_name=name,
         extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": "4099",
             "spark.driver.memory": os.environ.get(
                 "SPARK_GRAFT_DRIVER_MEM", "16g"
             ),
@@ -151,115 +135,43 @@ def _ui_session(name: str):
     return spark
 
 
-def _stages(spark) -> list[dict]:
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    return _get(f"{ui}/api/v1/applications/{app_id}/stages")
-
-
-def _settled_new_stages(spark, before: set) -> tuple[list[dict], bool]:
-    """The UI status store is fed asynchronously by the listener bus
-    (spark.ui.liveUpdate.period), so a snapshot taken right after
-    count() can miss the final stage's shuffle metrics — an
-    undercounted profile later reads as a regression in --check.
-    Poll until the new-stage set AND its (bytes, records) sums are
-    identical across two consecutive reads with every new stage out
-    of ACTIVE/PENDING state, or 15 s passes. Returns (stages,
-    settled); a False second element means the row built from these
-    stages is suspect and must carry ``"settled": false`` (ADVICE
-    r12 — a warning alone leaves the suspect row indistinguishable
-    in the JSON a later --check or --bytes diff reads)."""
-    prev = None
-    deadline = time.time() + 15
-    while True:
-        new = [
-            s
-            for s in _stages(spark)
-            if (s["stageId"], s["attemptId"]) not in before
-        ]
-        snap = (
-            tuple(sorted((s["stageId"], s["attemptId"]) for s in new)),
-            sum(s.get("shuffleWriteBytes", 0) for s in new),
-            sum(s.get("shuffleWriteRecords", 0) for s in new),
-        )
-        settled = all(
-            s.get("status") not in ("ACTIVE", "PENDING") for s in new
-        )
-        if snap == prev and settled:
-            return new, True
-        if time.time() > deadline:
-            # returning silently would reintroduce the undercount this
-            # poll exists to prevent — say so, the row is suspect
-            print(
-                "warning: stage metrics did not settle within 15 s — "
-                "this measurement may undercount shuffle bytes",
-                file=sys.stderr,
-            )
-            return new, False
-        prev = snap
-        time.sleep(0.1)
-
-
 def measure(spark, name: str, sf_dir: str, fn=None) -> dict:
-    """Run one query to completion and attribute ONLY its stages:
-    the completed-stage set is snapshotted before and after, so many
-    queries can share one session (stage history retention default is
-    1000 stages — far above the baselined set). Queries in
-    WARM_REQUIRED get one un-measured run first so their one-time
-    per-(sf, mtime) index/warehouse build never lands inside the
-    measured stage set (cold-cache profiles read 40-130x warm bytes
-    and false-flag in --check). ``fn`` overrides the registry lookup
-    for non-registry probes (e.g. exp_scaling's production-sizing
-    variants)."""
+    """Run one query to completion and attribute ONLY its jobs, so many
+    queries can share one session. Queries in WARM_REQUIRED get one
+    un-measured run first, outside the measured block, so their
+    one-time per-(sf, mtime) index/warehouse build is never counted
+    (cold-cache profiles read 40-130x warm bytes and false-flag in
+    --check). ``fn`` overrides the registry lookup for non-registry
+    probes (e.g. exp_scaling's production-sizing variants)."""
     fn = fn or QUERIES[name]
     if name in WARM_REQUIRED:
         fn(spark, sf_dir).count()
-    # settled read: prior queries' (and the warm run's) stages must
-    # finish flushing into the status store before they can be
-    # excluded from this query's attribution — an unsettled BEFORE
-    # read can over-count (prior stages mis-attributed to this row),
-    # so it taints the row just like an unsettled AFTER read
-    prior, pre_ok = _settled_new_stages(spark, set())
-    before = {(s["stageId"], s["attemptId"]) for s in prior}
     spark.catalog.clearCache()
-    t0 = time.time()
-    rows = fn(spark, sf_dir).count()
-    sec = round(time.time() - t0, 2)
-    new, post_ok = _settled_new_stages(spark, before)
-    wbytes = sum(s.get("shuffleWriteBytes", 0) for s in new)
-    wrecs = sum(s.get("shuffleWriteRecords", 0) for s in new)
-    rec = {
-        "bytes": wbytes,
-        "mb": round(wbytes / 1e6, 2),
-        "records": wrecs,
-        "stages": len(new),
+    rows, prof = profile.run(spark, lambda: fn(spark, sf_dir).count())
+    return {
+        "bytes": prof["shuffle_write_bytes"],
+        "mb": round(prof["shuffle_write_bytes"] / 1e6, 2),
+        "records": prof["shuffle_write_records"],
+        "stages": prof["stages"],
         "rows": rows,
-        "sec": sec,
+        "sec": round(prof["wall_s"], 2),
     }
-    # key is ABSENT on trusted rows so committed pre-r13 artifacts
-    # (which predate it) read as trusted, and the JSON diff stays
-    # byte-identical when nothing is wrong
-    if not (pre_ok and post_ok):
-        rec["settled"] = False
-    return rec
 
 
 def run_set(names: list[str], sf_dir: str) -> dict:
-    spark = _ui_session("exchange_bytes_baseline")
+    spark = _session("exchange_bytes_baseline")
     out: dict[str, dict] = {}
     for name in names:
         rec = measure(spark, name, sf_dir)
         out[name] = rec
-        flag = " UNSETTLED" if rec.get("settled") is False else ""
         print(f"# {name}: {rec['mb']} MB, {rec['records']} records, "
-              f"{rec['stages']} stages, {rec['rows']} rows, {rec['sec']}s"
-              f"{flag}",
+              f"{rec['stages']} stages, {rec['rows']} rows, {rec['sec']}s",
               file=sys.stderr)
     return {"sf_dir": sf_dir, "queries": out}
 
 
 def check(baseline_path: str, sf_dir: str | None, threshold: float,
-          out_path: str | None, strict: bool = False) -> int:
+          out_path: str | None) -> int:
     base = json.load(open(baseline_path))
     sf = sf_dir or base["sf_dir"]
     # validate BEFORE the sweep: a renamed/removed registry query left
@@ -273,27 +185,11 @@ def check(baseline_path: str, sf_dir: str | None, threshold: float,
             file=sys.stderr,
         )
         return 2
-    # an unsettled baseline row is a possibly-undercounted PIN — the
-    # comparison floor itself is suspect, so --strict refuses it
-    # outright (also before the sweep); non-strict warns
-    unsettled_base = [
-        q for q, r in base["queries"].items()
-        if r.get("settled") is False
-    ]
-    if unsettled_base:
-        msg = (f"baseline {baseline_path} contains unsettled "
-               f"(possibly undercounted) rows: {unsettled_base} — "
-               f"regenerate it with --baseline")
-        if strict:
-            print(f"error: {msg}", file=sys.stderr)
-            return 2
-        print(f"warning: {msg}", file=sys.stderr)
     fresh = run_set(list(base["queries"]), sf)
     if out_path:
         with open(out_path, "w") as fh:
             json.dump(fresh, fh, indent=1)
     failures = []
-    unsettled_fresh = []
     for name, b in base["queries"].items():
         n = fresh["queries"][name]
         grew = (
@@ -308,21 +204,13 @@ def check(baseline_path: str, sf_dir: str | None, threshold: float,
             print(f"BYTE REGRESSION {line}")
         elif ratio < 1 / threshold:
             print(f"shrunk {line}")
-        if n.get("settled") is False:
-            # an undercounted fresh row can read UNDER threshold and
-            # mask a real regression — --strict treats it as a failure
-            unsettled_fresh.append(name)
-            print(f"{'UNSETTLED' if strict else 'warning: unsettled'} "
-                  f"{line}")
     print(json.dumps({
         "checked": len(base["queries"]),
         "threshold": threshold,
         "byte_regressions": len(failures),
-        "unsettled": len(unsettled_fresh),
-        "strict": strict,
         "sf_dir": sf,
     }))
-    return 1 if failures or (strict and unsettled_fresh) else 0
+    return 1 if failures else 0
 
 
 def _usage(msg: str) -> int:
@@ -359,30 +247,22 @@ def main() -> int:
         result = run_set(names, sf_dir)
         with open(out_path, "w") as fh:
             json.dump(result, fh, indent=1)
-        # a suspect (possibly undercounted) row must be visible in the
-        # summary AND the exit code — an artifact destined for commit
-        # or the round-gate diff cannot be certified by stderr alone
-        unsettled = sorted(
-            q for q, r in result["queries"].items()
-            if r.get("settled") is False
-        )
         print(json.dumps({
             "baseline": out_path,
             "queries": len(names),
             "total_mb": round(
                 sum(q["bytes"] for q in result["queries"].values()) / 1e6, 2
             ),
-            "unsettled": unsettled,
             "sf_dir": sf_dir,
         }))
-        return 1 if unsettled else 0
+        return 0
 
     if argv[0] == "--check":
         if len(argv) < 2 or argv[1].startswith("--"):
             return _usage("--check requires a BASELINE.json operand")
         baseline_path = argv[1]
         rest = argv[2:]
-        sf_dir, threshold, out_path, strict = None, 1.2, None, False
+        sf_dir, threshold, out_path = None, 1.2, None
         while rest:
             if rest[0] in ("--sf", "--threshold", "--out") and len(rest) < 2:
                 return _usage(f"{rest[0]} requires an operand")
@@ -396,18 +276,16 @@ def main() -> int:
                 rest = rest[2:]
             elif rest[0] == "--out":
                 out_path, rest = rest[1], rest[2:]
-            elif rest[0] == "--strict":
-                strict, rest = True, rest[1:]
             else:
                 return _usage(f"unknown arg {rest[0]}")
-        return check(baseline_path, sf_dir, threshold, out_path, strict)
+        return check(baseline_path, sf_dir, threshold, out_path)
 
     # single-query mode (round-10 shape)
     name = argv[0]
     if name not in QUERIES:
         return _usage(f"unknown query {name!r}")
     sf_dir = argv[1] if len(argv) > 1 else "/root/testdata/sf0.1"
-    spark = _ui_session(f"exchange_bytes_{name}")
+    spark = _session(f"exchange_bytes_{name}")
     rec = measure(spark, name, sf_dir)
     out = {
         "query": name,
@@ -419,8 +297,6 @@ def main() -> int:
         "shuffle_write_records": rec["records"],
         "stages": rec["stages"],
     }
-    if rec.get("settled") is False:
-        out["settled"] = False
     print(json.dumps(out))
     return 0
 

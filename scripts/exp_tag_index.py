@@ -8,12 +8,12 @@ Builds a synthetic warehouse per factor (rows = 40k x f over 128 days;
 a release-cohort tag localized to 1/16 of the days plus three
 every-row tag keys for realistic map width), runs BOTH access paths to
 completion, and reports REAL filesystem IO: /proc/<jvm>/io rchar
-deltas. The UI's stage ``inputBytes`` is not usable here — it
+deltas. The stage metric ``inputBytes`` is not usable here — it
 under-reports local parquet scans (measured 0.5 MB for a 21 MB full
 scan) and counts in-memory block re-reads — while rchar sees exactly
 what partition pruning, column pruning and row-group skipping avoid.
-Shuffle bytes still come from the settled-stage UI plumbing shared
-with exp_exchange_bytes. The routed path must read less than the
+Shuffle bytes come from the stage-metrics reader
+(``refluxdb_spark.profile``). The routed path must read less than the
 fallback AND return identical rows; day-localization is the
 selectivity regime the engine's cost rule routes (an every-day tag
 costs out and serves from the scan — see
@@ -38,14 +38,15 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
 )
 
-from exp_exchange_bytes import _settled_new_stages, _stages, _ui_session  # noqa: E402
+from exp_exchange_bytes import _session  # noqa: E402
+
+from refluxdb_spark import profile  # noqa: E402
 
 ROWS_X1 = 40_000
 DAYS = 128
@@ -123,7 +124,7 @@ def consume(df) -> int:
 def _jvm_rchar(spark) -> int:
     """Bytes the driver JVM (which, in local mode, IS every executor)
     has requested from the filesystem, cumulatively — /proc/<pid>/io
-    rchar. This is the honest IO metric here: the UI's stage
+    rchar. This is the honest IO metric here: the stage metric
     ``inputBytes`` under-reports local parquet scans (measured 0.5 MB
     for a 21 MB full scan) and counts in-memory block re-reads, while
     rchar sees exactly what partition pruning, column pruning and
@@ -137,24 +138,21 @@ def _jvm_rchar(spark) -> int:
 
 
 def measure(spark, label: str, thunk) -> dict:
-    prior, pre_ok = _settled_new_stages(spark, set())
-    before = {(s["stageId"], s["attemptId"]) for s in prior}
     spark.catalog.clearCache()
-    r0 = _jvm_rchar(spark)
-    t0 = time.time()
-    rows = consume(thunk())
-    sec = round(time.time() - t0, 2)
-    read = _jvm_rchar(spark) - r0
-    new, post_ok = _settled_new_stages(spark, before)
-    rec = {
+
+    def read_and_consume():
+        r0 = _jvm_rchar(spark)
+        rows = consume(thunk())
+        return rows, _jvm_rchar(spark) - r0
+
+    (rows, read), prof = profile.run(spark, read_and_consume)
+    return {
         "label": label,
         "rows": rows,
-        "sec": sec,
+        "sec": round(prof["wall_s"], 2),
         "input_bytes": read,
-        "shuffle_bytes": sum(s.get("shuffleWriteBytes", 0) for s in new),
-        "settled": bool(pre_ok and post_ok),
+        "shuffle_bytes": prof["shuffle_write_bytes"],
     }
-    return rec
 
 
 def main() -> int:
@@ -173,7 +171,7 @@ def main() -> int:
         print(f"error: factors must be >= 1, got {factors}", file=sys.stderr)
         return 2
 
-    spark = _ui_session("exp_tag_index")
+    spark = _session("exp_tag_index")
     print("| factor | path | rows | input MB | shuffle MB | sec | read ratio |")
     print("|---|---|---|---|---|---|---|")
     failures = []
@@ -201,7 +199,6 @@ def main() -> int:
                 f"| x{f} | {r['label']} | {r['rows']} "
                 f"| {r['input_bytes'] / 1e6:.2f} | {r['shuffle_bytes'] / 1e6:.2f} "
                 f"| {r['sec']} | {ratio:.3f}x |"
-                + (" UNSETTLED" if not r["settled"] else "")
             )
         if routed["rows"] != fallback["rows"]:
             failures.append(f"x{f}: row mismatch {routed['rows']} != {fallback['rows']}")
@@ -210,8 +207,6 @@ def main() -> int:
                 f"x{f}: routed read {routed['input_bytes']} >= "
                 f"fallback {fallback['input_bytes']}"
             )
-        if not (routed["settled"] and fallback["settled"]):
-            failures.append(f"x{f}: unsettled stage metrics — re-measure")
     for msg in failures:
         print(f"FAIL {msg}", file=sys.stderr)
     if not failures:

@@ -291,6 +291,12 @@ def test_compare_bytes_prints_certification_summary(tmp_path, capsys):
     # identical profiles certify 3/3 exact at 0% deviation, exit 0
     assert bc.compare_bytes(base, base, 1.2) == 0
     assert "shuffle-records exact: 3/3" in capsys.readouterr().out
+    # a query in only one profile is outside the compare
+    extra = profile("c.json", {"qa": (1_000_000, 50), "qb": (0, 0),
+                               "qc": (2_000_000, 99), "qx": (900_000, 7)})
+    assert bc.compare_bytes(base, extra, 1.2) == 0
+    out = capsys.readouterr().out
+    assert "common queries: 3" in out and "shuffle-records exact: 3/3" in out
 
 
 def test_compare_bytes_missing_records_not_counted_exact(tmp_path, capsys):
@@ -327,75 +333,6 @@ def test_compare_bytes_missing_records_not_counted_exact(tmp_path, capsys):
                                       "records": 3}})
     assert bc.compare_bytes(legacy, mixed, 1.2) == 4
     assert "shuffle-records exact: 0/2" in capsys.readouterr().out
-
-
-def test_compare_bytes_fails_on_unsettled_rows(tmp_path, capsys):
-    """Code review r13: the round gate is --baseline then
-    compare_bytes --bytes — if a fresh row carries "settled": false
-    (possibly undercounted), a <=1.00x diff can mask a real
-    regression, so the diff must FAIL on the taint, naming the side."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"),
-    )
-    import bench_compare as bc
-
-    def profile(name, rows):
-        p = tmp_path / name
-        p.write_text(json.dumps({"sf_dir": "x", "queries": rows}))
-        return str(p)
-
-    trusted = {"q": {"bytes": 1000, "mb": 0.001, "records": 10}}
-    suspect = {"q": {"bytes": 1000, "mb": 0.001, "records": 10,
-                     "settled": False}}
-    # identical bytes, but the NEW side is tainted -> exit 1
-    assert bc.compare_bytes(profile("a.json", trusted),
-                            profile("b.json", suspect), 1.2) == 1
-    out = capsys.readouterr().out
-    assert "UNSETTLED q" in out and "new row" in out
-    # tainted BASE side also fails, named as base
-    assert bc.compare_bytes(profile("c.json", suspect),
-                            profile("d.json", trusted), 1.2) == 1
-    assert "base row" in capsys.readouterr().out
-    # both trusted -> clean exit
-    assert bc.compare_bytes(profile("e.json", trusted),
-                            profile("f.json", trusted), 1.2) == 0
-
-
-def test_compare_bytes_unsettled_scan_covers_full_sets(tmp_path, capsys):
-    """ADVICE r13: the taint scan must cover BOTH files' FULL query
-    sets — a tainted row present in only one profile (outside the
-    common intersection) still marks that file unfit to certify from,
-    and a row tainted on both sides must name both sides."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"),
-    )
-    import bench_compare as bc
-
-    def profile(name, rows):
-        p = tmp_path / name
-        p.write_text(json.dumps({"sf_dir": "x", "queries": rows}))
-        return str(p)
-
-    ok = {"bytes": 1000, "mb": 0.001, "records": 10}
-    bad = {"bytes": 1000, "mb": 0.001, "records": 10, "settled": False}
-    # tainted row exists ONLY in the new profile (no common counterpart)
-    base = profile("a.json", {"q": ok})
-    new = profile("b.json", {"q": ok, "extra": bad})
-    assert bc.compare_bytes(base, new, 1.2) == 1
-    out = capsys.readouterr().out
-    assert "UNSETTLED extra" in out and "new row" in out
-    # tainted on BOTH sides -> both named in one line
-    assert bc.compare_bytes(profile("c.json", {"q": bad}),
-                            profile("d.json", {"q": bad}), 1.2) == 1
-    assert "base and new row" in capsys.readouterr().out
 
 
 def test_compare_timings_calibrated_normalizes_box_noise(tmp_path, capsys):
@@ -632,6 +569,27 @@ def test_decode_prev_artifact_last_wins(tmp_path):
     )}))
     t, cal = bench.decode_prev_artifact(str(p))
     assert t[bench.HEADLINE[0]] == 2.0 and cal == 0.45
+
+
+def test_decode_prev_artifact_pairs_subset_and_probe_of_newest_run(tmp_path):
+    """A tail holding an older run whole and only the newest run's
+    summary line (its compact line pushed out of the window) decodes
+    the NEWEST run: its slowest-first subset and its own probe — never
+    the older run's compact values paired with the newer probe."""
+    import bench
+
+    old = {n: 1.0 for n in bench.HEADLINE}
+    old_head, old_compact, old_summary = bench.emit_lines(old, 3, 0.30, 0.1)
+    new = {n: 2.0 for n in bench.HEADLINE}
+    new_summary = bench.emit_lines(new, 3, 0.45, 0.1)[2]
+    p = tmp_path / "BENCH_r07.json"
+    p.write_text(json.dumps({"tail": "\n".join(
+        [old_head, old_compact, old_summary, new_summary]
+    )}))
+    t, cal = bench.decode_prev_artifact(str(p))
+    assert t == json.loads(new_summary)["queries"]
+    assert t and set(t.values()) == {2.0}
+    assert cal == 0.45
 
 
 def test_self_adjudication_survives_headline_growth(tmp_path):

@@ -95,7 +95,7 @@ def test_shared_token_warns_on_non_document_queries(monkeypatch, capsys):
     def _boom(name):
         raise RuntimeError("sentinel: session build reached")
 
-    monkeypatch.setattr(cr, "_ui_session", _boom)
+    monkeypatch.setattr(cr, "_session", _boom)
     monkeypatch.setattr(
         sys, "argv",
         ["exp_cap_regime.py", "--queries", "tpch_q1_pricing_summary", "3"],
@@ -105,24 +105,19 @@ def test_shared_token_warns_on_non_document_queries(monkeypatch, capsys):
     assert "not a scaling claim" in capsys.readouterr().err
 
 
-def test_published_table_flags_unsettled_rows(monkeypatch, capsys):
-    """ADVICE r13: an unsettled (possibly undercounted) measure()
-    record previously landed in the published §9 markdown row with
-    only a transient stderr warning — a copy-paste of the table drops
-    that. The row itself must carry an UNSETTLED flag and main() must
-    exit nonzero, matching the --baseline/--check/--bytes treatment.
+def test_published_table_has_one_row_per_point(monkeypatch, capsys):
+    """The §9 markdown table carries one row per (query, factor) point,
+    the x1 point as the 1.0x anchor, and a clean sweep exits 0.
     measure/session/corpus-build are stubbed; no Spark needed."""
     import exp_cap_regime as cr
 
     def fake_measure(spark, name, sf_dir, fn=None):
-        rec = {"bytes": 1000, "mb": 0.0, "records": 10,
-               "stages": 1, "rows": 1, "sec": 0.1}
-        if sf_dir.endswith("x3"):
-            rec["settled"] = False
-        return rec
+        nbytes = 4000 if sf_dir.endswith("x3") else 1000
+        return {"bytes": nbytes, "mb": nbytes / 1e6, "records": 10,
+                "stages": 1, "rows": 1, "sec": 0.1}
 
     monkeypatch.setattr(cr, "measure", fake_measure)
-    monkeypatch.setattr(cr, "_ui_session", lambda name: object())
+    monkeypatch.setattr(cr, "_session", lambda name: object())
     monkeypatch.setattr(
         cr, "build_shared_token", lambda spark, f: f"/fake/x{f}"
     )
@@ -130,24 +125,12 @@ def test_published_table_flags_unsettled_rows(monkeypatch, capsys):
         sys, "argv",
         ["exp_cap_regime.py", "--queries", "dedup_char_ngram_pairs", "3"],
     )
-    assert cr.main() == 1
-    captured = capsys.readouterr()
-    # the x3 row carries the flag IN the table; the x1 row does not
-    flagged = [l for l in captured.out.splitlines() if "UNSETTLED" in l]
-    assert len(flagged) == 1 and "| x3 " in flagged[0]
-    assert "dedup_char_ngram_pairs@x3" in captured.err
-    assert "re-run before publishing" in captured.err
-
-    # all-settled sweep: no flag, exit 0 (the quiet path is unchanged)
-    monkeypatch.setattr(
-        cr, "measure",
-        lambda spark, name, sf_dir, fn=None: {
-            "bytes": 1000, "mb": 0.0, "records": 10,
-            "stages": 1, "rows": 1, "sec": 0.1,
-        },
-    )
     assert cr.main() == 0
-    assert "UNSETTLED" not in capsys.readouterr().out
+    rows = [l for l in capsys.readouterr().out.splitlines()
+            if l.startswith("| dedup_char_ngram_pairs ")]
+    assert len(rows) == 2
+    assert "| x1 " in rows[0] and "| 1.0x |" in rows[0]
+    assert "| x3 " in rows[1] and "| 4.0x | 1.26 |" in rows[1]
 
 
 def test_embeddings_guard_predicate_matches_plan_reads(spark, sf_dir):

@@ -13,10 +13,11 @@ so their next wobble is byte-adjudicated), the r10 carry-over
 sim_rp_lsh_pairs, and the three r11 join-filter-below-aggregate
 rewrites (q16/q20/q21) so regrowth of that pattern is caught.
 
-Runs in a SUBPROCESS: the measurement reads per-stage shuffle metrics
-from the Spark UI REST API, which the shared test session disables —
-a fresh JVM with the UI on is the one honest way to get the same
-numbers the SCALE.md baselines were recorded with. (~60 s at sf0.01.)
+Runs in a SUBPROCESS: the re-measurement is the script's own --check
+mode, in a session configured like the one that recorded the baseline
+(the shared test session pins its own shuffle partitions and heap).
+Each query's stage metrics are read with the UI off from the drained
+status store (refluxdb_spark.profile). (~60 s at sf0.01.)
 
 Regenerate the baseline after an INTENTIONAL plan change:
 
@@ -81,10 +82,6 @@ def test_exchange_bytes_within_budget(tmp_path):
             "--sf", SF_DIR,
             "--threshold", "1.2",
             "--out", str(out),
-            # VERDICT r12 item 3: in --check an undercounted (unsettled)
-            # re-measure can mask a real regression — the fence fails on
-            # the settle timeout instead of trusting the suspect row
-            "--strict",
         ],
         capture_output=True,
         text=True,
@@ -140,88 +137,54 @@ def _baseline_file(tmp_path, name, rows):
     return str(p)
 
 
-def _row(nbytes, settled=None):
-    r = {"bytes": nbytes, "mb": nbytes / 1e6, "records": nbytes,
-         "stages": 1, "rows": 1, "sec": 0.1}
-    if settled is not None:
-        r["settled"] = settled
-    return r
+def _row(nbytes):
+    return {"bytes": nbytes, "mb": nbytes / 1e6, "records": nbytes,
+            "stages": 1, "rows": 1, "sec": 0.1}
 
 
-def test_check_strict_settle_handling(monkeypatch, capsys, tmp_path):
-    """VERDICT r12 item 3 + ADVICE r12: a row whose stage metrics
-    never settled carries `"settled": false`; --strict turns that from
-    a warning into a failure. All three legs run without Spark: the
-    baseline-rejection leg returns before run_set, and the fresh-row
-    legs monkeypatch run_set."""
+def test_check_and_baseline_modes_without_spark(monkeypatch, capsys, tmp_path):
+    """--check exits 0 on a clean re-measure and 1 on byte growth past
+    both the threshold and the 64 KiB floor; --baseline writes its
+    artifact and a summary line. run_set is monkeypatched, so no
+    Spark."""
     sys.path.insert(0, os.path.join(_REPO, "scripts"))
     import exp_exchange_bytes as xb
 
     from refluxdb_spark.queries import QUERIES
     q = next(iter(QUERIES))  # any registered name passes validation
 
-    # 1. strict REJECTS an unsettled baseline row before the sweep
-    bad_base = _baseline_file(tmp_path, "bad.json",
-                              {q: _row(1000, settled=False)})
-    assert xb.check(bad_base, None, 1.2, None, strict=True) == 2
-    assert "unsettled" in capsys.readouterr().err
+    base = _baseline_file(tmp_path, "base.json", {q: _row(1000)})
+    for fresh_bytes, want in [(1000, 0), (200_000, 1)]:
+        monkeypatch.setattr(xb, "run_set", lambda names, sf, n=fresh_bytes: {
+            "sf_dir": sf, "queries": {q: _row(n)}})
+        assert xb.check(base, None, 1.2, None) == want
+        summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert summary["checked"] == 1 and summary["byte_regressions"] == want
 
-    # 2. strict FAILS on an unsettled fresh row even with no byte growth
-    good_base = _baseline_file(tmp_path, "good.json", {q: _row(1000)})
-    monkeypatch.setattr(xb, "run_set", lambda names, sf: {
-        "sf_dir": sf, "queries": {q: _row(1000, settled=False)}})
-    assert xb.check(good_base, None, 1.2, None, strict=True) == 1
-    out = capsys.readouterr().out
-    assert "UNSETTLED" in out and '"unsettled": 1' in out
-
-    # 3. non-strict only WARNS on the same condition (exit 0), and a
-    #    settled clean re-measure passes under strict
-    assert xb.check(good_base, None, 1.2, None, strict=False) == 0
-    assert "unsettled" in capsys.readouterr().out
+    out = tmp_path / "prof.json"
     monkeypatch.setattr(xb, "run_set", lambda names, sf: {
         "sf_dir": sf, "queries": {q: _row(1000)}})
-    assert xb.check(good_base, None, 1.2, None, strict=True) == 0
+    monkeypatch.setattr(
+        sys, "argv", ["exp_exchange_bytes.py", "--baseline", str(out), q]
+    )
+    assert xb.main() == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["queries"] == 1 and summary["baseline"] == str(out)
+    assert json.loads(out.read_text())["queries"][q] == _row(1000)
 
 
-def test_baseline_mode_surfaces_unsettled_rows(monkeypatch, capsys, tmp_path):
-    """Code review r13: --baseline writes artifacts destined for
-    commit and the round-gate diff — a suspect row must appear in the
-    summary JSON's "unsettled" list AND flip the exit code to 1, not
-    hide in a stderr warning. run_set is monkeypatched, so no Spark."""
+def test_measure_records_the_profile_of_the_query_alone(monkeypatch):
+    """measure() maps the reader's profile of the measured run onto a
+    row, and a WARM_REQUIRED query's warm-up run happens before, outside
+    the measured block. Pure Python: spark and the reader are faked."""
     sys.path.insert(0, os.path.join(_REPO, "scripts"))
     import exp_exchange_bytes as xb
 
-    from refluxdb_spark.queries import QUERIES
-    q = next(iter(QUERIES))
-    out = tmp_path / "prof.json"
-
-    for settled_kw, want_exit, want_unsettled in [
-        ({}, 0, []), ({"settled": False}, 1, [q]),
-    ]:
-        monkeypatch.setattr(xb, "run_set", lambda names, sf, kw=settled_kw: {
-            "sf_dir": sf, "queries": {q: _row(1000, **kw)}})
-        monkeypatch.setattr(
-            sys, "argv",
-            ["exp_exchange_bytes.py", "--baseline", str(out), q],
-        )
-        assert xb.main() == want_exit
-        summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-        assert summary["unsettled"] == want_unsettled
-        # the artifact itself is still written for inspection
-        assert q in json.loads(out.read_text())["queries"]
-
-
-def test_measure_marks_unsettled_rows(monkeypatch):
-    """measure() must stamp `"settled": false` when EITHER surrounding
-    stage read times out (an unsettled before-read over-counts, an
-    unsettled after-read under-counts), and omit the key entirely on
-    trusted rows so committed pre-r13 artifacts stay byte-identical.
-    Pure Python: spark + the stage poll are faked."""
-    sys.path.insert(0, os.path.join(_REPO, "scripts"))
-    import exp_exchange_bytes as xb
+    calls = []
 
     class _Df:
         def count(self):
+            calls.append("count")
             return 7
 
     class _Spark:
@@ -230,18 +193,22 @@ def test_measure_marks_unsettled_rows(monkeypatch):
             def clearCache():
                 pass
 
+    def fake_run(spark, thunk):
+        calls.append("block")
+        return thunk(), {"shuffle_write_bytes": 2_500_000,
+                         "shuffle_write_records": 40, "stages": 3,
+                         "wall_s": 1.234}
+
+    monkeypatch.setattr(xb.profile, "run", fake_run)
     fn = lambda spark, sf: _Df()  # noqa: E731
-    for pre_ok, post_ok in [(True, True), (False, True), (True, False)]:
-        oks = iter([pre_ok, post_ok])
-        monkeypatch.setattr(
-            xb, "_settled_new_stages", lambda spark, before: ([], next(oks))
-        )
-        rec = xb.measure(_Spark(), "fake", "/none", fn=fn)
-        if pre_ok and post_ok:
-            assert "settled" not in rec
-        else:
-            assert rec["settled"] is False
-        assert rec["rows"] == 7
+    rec = xb.measure(_Spark(), "fake", "/none", fn=fn)
+    assert rec == {"bytes": 2_500_000, "mb": 2.5, "records": 40,
+                   "stages": 3, "rows": 7, "sec": 1.23}
+    assert calls == ["block", "count"]
+    warm = next(iter(xb.WARM_REQUIRED))
+    calls.clear()
+    xb.measure(_Spark(), warm, "/none", fn=fn)
+    assert calls == ["count", "block", "count"]
 
 
 def test_committed_full_registry_profiles_cover_the_registry():
