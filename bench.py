@@ -354,9 +354,6 @@ def main() -> None:
         ),
         timings_cpu=timings_cpu,
     )
-    # record this HEADLINE generation so FUTURE grown-registry rounds
-    # can still decode this run's compact line by name
-    save_names_registry()
     for line in lines:
         print(line)
     out = os.environ.get(
@@ -379,51 +376,19 @@ def names_digest(names: list[str]) -> str:
 # with margin for the trailing newline and clock-width drift.
 TAIL_SUMMARY_BUDGET = 1900
 
-NAMES_REGISTRY = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "scripts", "bench_headline_names.json"
-)
+
+def decode_compact(rec: dict) -> dict[str, float] | None:
+    """Timings of a headline_query_times_compact record, by zipping its
+    values with HEADLINE; None unless its names_md5 matches the current
+    HEADLINE (the line carries no names, so values recorded against
+    another list cannot be attributed)."""
+    values = rec.get("values", [])
+    if rec.get("names_md5") == names_digest(HEADLINE) and len(values) == len(HEADLINE):
+        return dict(zip(HEADLINE, (float(v) for v in values)))
+    return None
 
 
-def load_names_registry(path: str = NAMES_REGISTRY) -> dict[str, list[str]]:
-    """names_md5 -> HEADLINE name list, for every HEADLINE generation
-    that ever ran bench on this repo. The compact stdout line is too
-    size-constrained to carry ~114 names (the driver captures a ~2000
-    char tail), so the names live in this committed registry instead:
-    a grown-HEADLINE round can still decode the PREVIOUS round's
-    compact values by that round's own name order and intersect by
-    name (VERDICT r16 item 2 — r16's calibrated_vs_prev stamped null
-    exactly when the registry grew, the round that most needed it).
-    The current list is always unioned in, so a missing/stale file
-    only loses CROSS-generation decode, never same-generation."""
-    reg: dict[str, list[str]] = {}
-    try:
-        with open(path) as fh:
-            loaded = json.load(fh)
-        if isinstance(loaded, dict):
-            reg = {
-                k: [str(n) for n in v]
-                for k, v in loaded.items()
-                if isinstance(v, list)
-            }
-    except (OSError, json.JSONDecodeError, ValueError):
-        pass
-    reg[names_digest(HEADLINE)] = list(HEADLINE)
-    return reg
-
-
-def save_names_registry(path: str = NAMES_REGISTRY) -> None:
-    """Merge the current HEADLINE generation into the registry file
-    (append-on-change: old generations are kept so their artifacts
-    stay decodable)."""
-    reg = load_names_registry(path)
-    with open(path, "w") as fh:
-        json.dump(reg, fh, indent=1, sort_keys=True)
-        fh.write("\n")
-
-
-def decode_prev_artifact(
-    path: str, names_registry: dict[str, list[str]] | None = None
-) -> tuple[dict[str, float], float | None]:
+def decode_prev_artifact(path: str) -> tuple[dict[str, float], float | None]:
     """Minimal decoder for a prior round's BENCH artifact (driver tail
     or full record): the NEWEST run's (timings, calibration_sec).
 
@@ -431,14 +396,12 @@ def decode_prev_artifact(
     ``calibration_sec`` (its head or its final summary line); the
     newest one is the run to decode, and it supplies the probe. Its
     timings come from a compact line met before a SECOND run record —
-    one whose names_md5 resolves against the CURRENT HEADLINE or any
-    generation in the committed names registry. Past a second run
+    one whose names_md5 matches the CURRENT HEADLINE. Past a second run
     record, every compact line belongs to an older run, so the newest
     summary's slowest-first ``queries`` subset is used instead
     (partial but real; common_n says how much). Nothing decodable
     gives ({}, ...) and the caller skips self-adjudication rather than
     guess across runs or list drift."""
-    registry = names_registry if names_registry is not None else load_names_registry()
     text = open(path).read()
     try:
         d = json.loads(text)
@@ -461,9 +424,9 @@ def decode_prev_artifact(
         if not isinstance(rec, dict):
             continue
         if rec.get("metric") == "headline_query_times_compact":
-            names = registry.get(rec.get("names_md5", ""))
-            if names is not None and len(rec.get("values", [])) == len(names):
-                timings = dict(zip(names, (float(v) for v in rec["values"])))
+            decoded = decode_compact(rec)
+            if decoded is not None:
+                timings = decoded
         elif "calibration_sec" in rec:
             if newest is not None:
                 break  # a second run: what lies further back is older
@@ -504,10 +467,8 @@ def self_adjudication(
 
     - ``calibrated_vs_prev``: this run's probe-normalized common-query
       total over the newest committed BENCH_r{N}; null when no prior
-      artifact decodes (against the current HEADLINE or any registry
-      generation — survives HEADLINE growth via the committed names
-      registry) or a probe is missing — absence is explicit, never
-      inferred.
+      artifact decodes against the current HEADLINE or a probe is
+      missing — absence is explicit, never inferred.
     - ``raw_vs_prev`` / ``common_n``: the UNCALIBRATED common-query
       ratio and how many queries it covers — the number that stays
       stable when the probe itself is noisy (VERDICT r16: same-code

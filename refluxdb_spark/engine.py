@@ -1011,7 +1011,7 @@ class RefluxEngine:
                 # value predicate skips whole row groups via footer
                 # min/max — without this, reading ONE value costs the
                 # whole key partition (measured 12x the bytes at x10,
-                # scripts/exp_tag_index.py)
+                # SCALE.md "Tag-index routed read vs map-scan")
                 df.repartitionByRange("series", "key", "value")
                 .sortWithinPartitions("series", "key", "value")
                 .write.mode("overwrite")

@@ -336,12 +336,12 @@ def jaccard_pairs_from_tokens(
         #    shuffles of the token relation for the a×b self-join the
         #    uncapped path needs.
         # posting feeds sizes and pairs. Deliberately NOT persisted:
-        # measured a wash at sf0.1 (scripts/exp_persist.py — cache
-        # write+read ≈ the recompute it saves) and a cached
-        # corpus-sized relation pinned past the operator's return is
-        # the real hazard in a long-lived session. At warehouse scale
-        # the durable form of this reuse is a materialized
-        # token/posting table (see save_minhash_index).
+        # measured a wash at sf0.1 (SCALE.md, "Retired experiment
+        # scripts" — cache write+read ≈ the recompute it saves) and a
+        # cached corpus-sized relation pinned past the operator's
+        # return is the real hazard in a long-lived session. At
+        # warehouse scale the durable form of this reuse is a
+        # materialized token/posting table (see save_minhash_index).
         w = Window.partitionBy(*join_keys)
         posting = (
             toks.withColumn("_df", F.count(F.lit(1)).over(w))
@@ -770,7 +770,8 @@ def minhash_dedup_pairs(
     one-aggregation shape consumes the (id, shingle) relation exactly
     once, so the persist it used to request was pure overhead — a
     corpus-sized cache write nothing reads twice (measured a wash
-    even when two passes consumed it: scripts/exp_persist.py).
+    even when two passes consumed it: SCALE.md, "Retired experiment
+    scripts").
     ``max_bucket`` caps LSH bucket size (hot-bucket guard — see
     ``minhash_lsh_candidates``); verification Jaccard is unaffected."""
     if cache_tokens:
@@ -907,10 +908,11 @@ def simhash_pairs(
     # both self-join sides consume the same bucket relation; the
     # fingerprint pipeline (md5 votes) evaluates once per side.
     # Deliberately NOT persisted: measured equal at sf0.1 with the
-    # cache (scripts/exp_persist.py — block write+read ≈ the recompute
-    # saved), and an operator-internal persist pins a corpus-sized
-    # relation past return with no release path — the memory hazard in
-    # a long-lived session (test_no_cached_rdds_after_dedup_operators).
+    # cache (SCALE.md, "Retired experiment scripts" — block write+read
+    # ≈ the recompute saved), and an operator-internal persist pins a
+    # corpus-sized relation past return with no release path — the
+    # memory hazard in a long-lived session
+    # (test_no_cached_rdds_after_dedup_operators).
     a = buckets.select(
         "c", "v", F.col("id").alias("id_a"), F.col("simhash").alias("_sa")
     )

@@ -845,11 +845,11 @@ def default_rp_band_bits(corpus_size: int, target_bucket: int = 32) -> int:
     and the per-band candidate cost is Θ(N² / 2^band_bits) — a FIXED
     band width is quadratic in the corpus no matter how uniform the
     data (measured: 11.7x cost at 10x rows with the old pinned 4-bit
-    bands, scripts/exp_scaling.py). Growing the width like log2(N)
-    pins the expected bucket at ``target_bucket`` and the candidate
-    cost at Θ(N · target_bucket) — corpus-linear. At 10^10 vectors
-    (100 TB of embeddings) this rule gives 29-bit bands; recall per
-    band falls as p_agree^band_bits, so scale also needs more bands
+    bands, SCALE.md §9 "Scale bugs this harness caught"). Growing the
+    width like log2(N) pins the expected bucket at ``target_bucket`` and
+    the candidate cost at Θ(N · target_bucket) — corpus-linear. At 10^10
+    vectors (100 TB of embeddings) this rule gives 29-bit bands; recall
+    per band falls as p_agree^band_bits, so scale also needs more bands
     (`nbands`) or multi-probe — width is the cost knob, band count the
     recall knob. Floor of 4 keeps tiny corpora at the oracled toy
     sizing."""
@@ -936,8 +936,8 @@ def rp_lsh_pairs(
         fp.select("id", F.explode(band_structs).alias("_bb"))
         .select("id", F.col("_bb.band").alias("band"), F.col("_bb.bv").alias("bv"))
         # both self-join sides read this; deliberately NOT persisted —
-        # measured FASTER without at sf0.1 (4.4 vs 5.0 s,
-        # scripts/exp_persist.py: the bit columns are cheap dot
+        # measured FASTER without at sf0.1 (4.4 vs 5.0 s, SCALE.md
+        # "Retired experiment scripts": the bit columns are cheap dot
         # products, block write+read costs more than recompute), and an
         # unreleased cache pins the relation across calls in a
         # long-lived session (same decision as simhash_pairs).

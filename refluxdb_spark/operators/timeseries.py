@@ -558,12 +558,12 @@ def ema(
     engine running the same recurrence (the DuckDB oracle's recursive
     CTE computes the identical expression sequence).
 
-    Measured alternative (scripts/exp_ema.py, sf0.1): pandas
-    ``ewm(alpha, adjust=False)`` runs the same recurrence vectorized
-    (5.2 → 4.3 s) but its kernel SKIPS the update when the running
-    value equals the input, so constant runs diverge from the oracle by
-    ulps. The loop stays: guaranteed parity beats a 17% gain that
-    breaks on adversarial data.
+    Measured alternative (sf0.1; SCALE.md, "Retired experiment
+    scripts"): pandas ``ewm(alpha, adjust=False)`` runs the same
+    recurrence vectorized (5.2 → 4.3 s) but its kernel SKIPS the update
+    when the running value equals the input, so constant runs diverge
+    from the oracle by ulps. The loop stays: guaranteed parity beats a
+    17% gain that breaks on adversarial data.
 
     Execution shape: ``repartition(by) + sortWithinPartitions(by, ts
     [, tiebreak]) + mapInPandas`` rather than per-group

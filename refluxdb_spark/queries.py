@@ -5544,9 +5544,9 @@ def sim_rp_lsh_pairs(spark, sf_dir):
     6-bit band width IS ``default_rp_band_bits`` at the bench corpus
     (sf0.1, N=2000): unrelated vectors collide per band at 2^-6, so
     the expected bucket is N/64 — the old pinned 4-bit bands measured
-    11.7x cost at 10x rows (scripts/exp_scaling.py); production
-    (band_bits=None) keeps sizing the width by log2(N) as the corpus
-    grows."""
+    11.7x cost at 10x rows (SCALE.md §9, "Scale bugs this harness
+    caught"); production (band_bits=None) keeps sizing the width by
+    log2(N) as the corpus grows."""
     return S.rp_lsh_pairs(
         load(spark, sf_dir, "embeddings"),
         bits=24, band_bits=6, threshold=0.35,

@@ -67,7 +67,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, names_digest  # noqa: E402
+from bench import HEADLINE, decode_compact, names_digest  # noqa: E402
 
 #: stale names_md5 digests already warned about (dedupe per process)
 _WARNED_MD5: set = set()
@@ -84,20 +84,18 @@ _META = {
 
 
 def _decode_compact(line: str) -> dict[str, float] | None:
-    """Decode a headline_query_times_compact line by zipping its values
-    with bench.HEADLINE — valid only while the names_md5 guard matches
-    the current HEADLINE list (i.e. the list is unchanged since the
-    artifact was recorded)."""
+    """Decode a headline_query_times_compact line through
+    bench.decode_compact (valid only while its names_md5 matches the
+    current HEADLINE), warning once per stale digest when it does not."""
     try:
         rec = json.loads(line)
     except json.JSONDecodeError:
         return None
     if not (isinstance(rec, dict) and rec.get("metric") == "headline_query_times_compact"):
         return None
-    if rec.get("names_md5") == names_digest(HEADLINE) and len(
-        rec.get("values", [])
-    ) == len(HEADLINE):
-        return dict(zip(HEADLINE, (float(v) for v in rec["values"])))
+    timings = decode_compact(rec)
+    if timings is not None:
+        return timings
     # a compact line exists but was recorded against a DIFFERENT
     # HEADLINE list (names_md5 mismatch) — the caller falls back to the
     # lossy ~58-pair regex scan; say so instead of degrading silently,

@@ -117,10 +117,10 @@ def _session(name: str):
     """The measurement session (UI off, like every session).
 
     Driver heap defaults to 16g here (engine default: 8g): a
-    measurement session lives through dozens of heavy queries with the
-    status store retaining every stage/task for attribution, and at
-    the x100 leg that aging pushed a mid-size broadcast build over the
-    8g driver's free-heap check ("Not enough memory to build and
+    full-registry ``--baseline`` session lives through every query,
+    with the status store retaining every stage/task for attribution,
+    and that aging can push a mid-size broadcast build over the 8g
+    driver's free-heap check ("Not enough memory to build and
     broadcast") — the same query passes in a fresh 8g session, so this
     is measurement-harness headroom, not an engine sizing change."""
     spark = get_spark(
@@ -141,8 +141,8 @@ def measure(spark, name: str, sf_dir: str, fn=None) -> dict:
     un-measured run first, outside the measured block, so their
     one-time per-(sf, mtime) index/warehouse build is never counted
     (cold-cache profiles read 40-130x warm bytes and false-flag in
-    --check). ``fn`` overrides the registry lookup for non-registry
-    probes (e.g. exp_scaling's production-sizing variants)."""
+    --check). ``fn`` overrides the registry lookup (the fence tests
+    substitute fakes through it)."""
     fn = fn or QUERIES[name]
     if name in WARM_REQUIRED:
         fn(spark, sf_dir).count()

@@ -592,83 +592,6 @@ def test_decode_prev_artifact_pairs_subset_and_probe_of_newest_run(tmp_path):
     assert cal == 0.45
 
 
-def test_self_adjudication_survives_headline_growth(tmp_path):
-    """VERDICT r16 item 2: a registry-growth round — exactly when the
-    archived artifact most needs context — must stamp a REAL
-    calibrated_vs_prev. The compact line is too size-constrained to
-    carry names, so the committed names registry maps the PREV
-    generation's names_md5 back to its name order; the adjudicator
-    then intersects by name."""
-    import bench
-
-    # simulate the PREVIOUS round's smaller HEADLINE generation
-    old_names = [n for n in bench.HEADLINE[:-4]]
-    old_digest = bench.names_digest(old_names)
-    assert old_digest != bench.names_digest(bench.HEADLINE)
-    prev_compact = json.dumps({
-        "metric": "headline_query_times_compact",
-        "names_md5": old_digest,
-        "values": [2.0] * len(old_names),
-    })
-    (tmp_path / "BENCH_r09.json").write_text(json.dumps({
-        "tail": prev_compact + '\n{"calibration_sec": 0.40}\n'
-    }))
-    # the committed registry knows the old generation
-    (tmp_path / "names.json").write_text(json.dumps({
-        old_digest: old_names
-    }))
-    reg = bench.load_names_registry(str(tmp_path / "names.json"))
-    assert reg[old_digest] == old_names  # old generation resolvable
-    assert bench.names_digest(bench.HEADLINE) in reg  # current unioned in
-    t, cal = bench.decode_prev_artifact(
-        str(tmp_path / "BENCH_r09.json"), names_registry=reg
-    )
-    assert len(t) == len(old_names) and cal == 0.40
-
-    # full adjudication path: monkey-free via the default registry,
-    # which always contains every generation bench has run on this
-    # repo — here we exercise the committed file itself
-    new_timings = {n: 1.0 for n in bench.HEADLINE}
-    import unittest.mock as _mock
-
-    with _mock.patch.object(bench, "load_names_registry", return_value=reg):
-        adj = bench.self_adjudication(
-            new_timings, 0.40, str(tmp_path), calibration_end=0.44
-        )
-    # common = the old generation's names; raw = 1.0s vs 2.0s = 0.5x
-    assert adj["prev_artifact"] == "BENCH_r09.json"
-    assert adj["common_n"] == len(old_names)
-    assert adj["raw_vs_prev"] == 0.5
-    assert adj["calibrated_vs_prev"] == 0.5
-    assert adj["probe_spread_pct"] == 10.0
-    # a 10% probe spread does NOT dominate a 50% measured delta
-    assert adj["calibrated_noise_dominated"] is False
-
-
-def test_names_registry_committed_file_decodes_r16_artifact():
-    """The committed registry must actually decode the newest archived
-    artifact (the thing the next round's bench will do): BENCH_r16's
-    compact line resolves to 114 named timings even though the current
-    HEADLINE has since grown."""
-    import os
-
-    import bench
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    art = os.path.join(repo, "BENCH_r16.json")
-    if not os.path.exists(art):
-        import pytest as _pytest
-
-        _pytest.skip("BENCH_r16.json not committed in this checkout")
-    t, cal = bench.decode_prev_artifact(art)
-    assert len(t) == 114 and cal is not None
-    # and the noise-domination verdict the r16 VERDICT had to hand-derive
-    # (probe spread 37% >> raw delta 0.4%) is now computable in-artifact
-    adj = bench.self_adjudication(t, cal, repo, calibration_end=cal)
-    assert adj["prev_artifact"] is not None
-    assert adj["raw_vs_prev"] is not None
-
-
 def test_cpu_axis_rides_head_and_summary_not_compact(tmp_path):
     """The executor-CPU axis (VERDICT r17 item 4): per-query CPU rides
     the FULL record only (the compact line is size-capped and the

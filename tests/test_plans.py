@@ -445,8 +445,9 @@ def test_no_cached_rdds_after_dedup_operators(spark, sf_dir):
     """Cache-lifetime contract (VERDICT r5 item 3): pair operators must
     not pin executor memory past their result — run each to completion
     and assert the session holds zero cached RDDs. (The former
-    operator-internal persists had no release path; exp_persist.py
-    measured them a wash-or-loss at sf0.1, so they're gone.)"""
+    operator-internal persists had no release path and measured a
+    wash-or-loss at sf0.1 — SCALE.md, "Retired experiment scripts" —
+    so they're gone.)"""
     import refluxdb_spark.operators.dedup as D
     import refluxdb_spark.operators.similarity as S
     from refluxdb_spark.queries import load

@@ -19,11 +19,29 @@ def _shuffle(spark):
     return spark.range(10_000).repartition(4, "id").groupBy(F.col("id") % 7).count()
 
 
+def _room_for_stages(spark, n):
+    """Run one-stage jobs until the shared session's status store can
+    take ``n`` more stages without a trim: past spark.ui.retainedStages
+    it evicts skipped stages first, a running block's own included."""
+    jsc = spark.sparkContext._jsc.sc()
+    stage_cls = spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.status.StageDataWrapper"
+    )
+    limit = int(spark.sparkContext.getConf().get("spark.ui.retainedStages", "1000"))
+    for _ in range(limit):
+        jsc.listenerBus().waitUntilEmpty()
+        if jsc.statusStore().store().count(stage_cls) + n <= limit:
+            return
+        spark.range(1).collect()
+    raise AssertionError("the status store never trimmed")
+
+
 def test_shuffle_reports_exact_records_and_cpu(spark):
     """A deterministic shuffle's record count is exact: the repartition
     writes one record per id, and the grouped aggregate writes one
     partial row per (input partition, key) pair — 4 partitions x 7
     keys, each partition holding every key."""
+    _room_for_stages(spark, 10)
     rows, prof = profile.run(spark, lambda: _shuffle(spark).collect())
     assert sorted(r["count"] for r in rows) == [1428] * 3 + [1429] * 4
     assert prof["shuffle_write_records"] == 10_000 + 4 * 7
@@ -183,3 +201,23 @@ def test_tooling_reads_stage_metrics_without_the_ui():
                 if pattern.search(line):
                     hits.append(f"{os.path.relpath(path, _REPO)}:{n}: {line.strip()}")
     assert not hits, "\n".join(hits)
+
+
+def test_cited_script_paths_exist():
+    """Every ``scripts/<name>.py|.json`` cited in the package, the tests,
+    the bench, the README or the verify recipe names a committed file,
+    so deleting a script fails here until its citations are repointed."""
+    sources = [os.path.join(_REPO, p) for p in ("bench.py", "README.md")]
+    sources.append(os.path.join(_REPO, ".claude", "skills", "verify", "SKILL.md"))
+    for sub in ("refluxdb_spark", "tests"):
+        sources += glob.glob(os.path.join(_REPO, sub, "**", "*.py"), recursive=True)
+    cite = re.compile(r"\bscripts/[A-Za-z0-9_]+\.(?:py|json)\b")
+    cited, missing = set(), []
+    for path in sorted(sources):
+        with open(path) as fh:
+            for n, line in enumerate(fh, 1):
+                for ref in cite.findall(line):
+                    cited.add(ref)
+                    if not os.path.exists(os.path.join(_REPO, ref)):
+                        missing.append(f"{os.path.relpath(path, _REPO)}:{n}: {ref}")
+    assert cited and not missing, "\n".join(missing)
